@@ -16,35 +16,8 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // DATA-AWARE partition sizing knobs (r15): on a cluster, set
-      // SPARK_GRAFT_PARALLELISM_FIRST=false and
-      // SPARK_GRAFT_ADVISORY_PARTITION_BYTES=128-256m so post-shuffle
-      // partition counts track BYTES (guide §2.2: 100 MB-1 GB
-      // partitions) instead of the core count. The LOCAL default
-      // keeps Spark's parallelism-first coalescing, for a measured
-      // reason: with bytes-based sizing on at sf0.1, per-round state
-      // checkpoints coalesce below the iterative operators' pinned
-      // edge partitioning and every round's join re-Exchanges the big
-      // side — the driver-metered shuffle bytes rose 15-40% across
-      // the whole rank family (g2/g7/g8/g11/g12/g17, s33, t6) with
-      // advisory=1m, and 16m additionally serialized compute-dense
-      // stages (d20 5.1→8.5 s). Bytes-based sizing is the right
-      // at-scale policy exactly when the advisory target exceeds the
-      // per-round state size, which 128m+ does.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE sort-merge→shuffled-hash rewrite: when every post-shuffle
-      // partition's build side is under this RUNTIME-measured size,
-      // the sorts are skipped (guide §3.1 — often faster when one
-      // side is moderately small per partition; the runtime check
-      // bounds the build-side memory, unlike the estimate-based
-      // preferSortMergeJoin=false). Default off upstream; measured
-      // here (see OPTIMIZATION_r15.md).
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP_BYTES", "0"))
+      // other AQE knobs keep Spark's defaults; a deployer sets them directly
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // graft tables are FIELD-ID mapped (Iceberg-style column
@@ -68,6 +41,14 @@ object GraftSession {
       // setting for frequent small commits.
       .config("spark.sql.streaming.stateStore.rocksdb" +
         ".changelogCheckpointing.enabled", "true")
+      // Stream-stream join state format 3: a partition's four join-state
+      // maps live as column families of ONE RocksDB instance, so each
+      // task commits one store (and writes one changelog) per trigger
+      // instead of four. Needs the RocksDB provider above — the
+      // HDFS-backed provider has no column families and refuses it at
+      // query start. A checkpoint records its format, so a query
+      // restarted from an older checkpoint keeps that checkpoint's format.
+      .config("spark.sql.streaming.join.stateFormatVersion", "3")
       .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
 
   /** Local session for tests / exploration. */

@@ -37,7 +37,8 @@ import graft.functions.{BloomAgg, BloomMightContain}
   * less than the extra aggregate), and probe at least 4x build (a
   * near-symmetric join gains nothing). Conservative defaults keep the
   * rule dormant on small data; a 100 TB probe against a bounded build
-  * side is exactly when it fires.
+  * side is exactly when it fires. Stream-stream joins never get it:
+  * their sides are join state, not one batch's rows.
   */
 object InjectBloomJoinFilter extends Rule[LogicalPlan] with PredicateHelper {
   val EnabledKey = "spark.graft.bloomJoin.enabled"
@@ -73,8 +74,14 @@ object InjectBloomJoinFilter extends Rule[LogicalPlan] with PredicateHelper {
       jt == Inner || jt == LeftOuter || jt == LeftSemi || jt == LeftAnti
 
     plan.transformUp {
+      // STREAM-STREAM joins skip: each side feeds join state that
+      // outlives the micro-batch, so a row this batch's other side
+      // cannot match may still match a later batch's row. (A side with
+      // no new data is an empty streaming LocalRelation: its bloom is
+      // empty and would reject every row of the other side.)
       case j @ Join(left, right, jt, Some(cond), hint)
-          if canFilterLeft(jt) || canFilterRight(jt) =>
+          if (canFilterLeft(jt) || canFilterRight(jt)) &&
+            !(left.isStreaming && right.isStreaming) =>
         // first equi-pair split by side; a multi-key join blooms on
         // one key (still zero false negatives — just less selective)
         val keys = splitConjunctivePredicates(cond).collectFirst {

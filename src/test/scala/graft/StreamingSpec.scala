@@ -2,10 +2,12 @@ package graft
 
 import java.time.Duration
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.BloomMightContain
 import graft.streaming.{CorpusIngest, OrderEnrichmentJob, StatefulOps, StreamingDedup}
 
 class StreamingSpec extends AnyFunSuite {
@@ -28,6 +30,11 @@ class StreamingSpec extends AnyFunSuite {
     last
   }
 
+  def rateJson(cur: String, rate: Int) =
+    s"""{"exchangeRateTime": "2024-01-01T00:00:00Z", "currency": "$cur", "rate": $rate}"""
+  def orderJson(id: Int, cur: String) =
+    s"""{"id": $id, "orderTime": "2024-01-01T00:00:02Z", "amount": 10, "currency": "$cur"}"""
+
   test("stream-stream interval join pipeline (MemoryStream end to end)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -39,46 +46,96 @@ class StreamingSpec extends AnyFunSuite {
     val q = out.writeStream.format("memory").queryName("enriched")
       .outputMode("append").start()
     try {
-      val rateJson =
-        """{"exchangeRateTime": "2024-01-01T00:00:00Z", "currency": "EUR", "rate": 3}"""
-      val orderJson =
-        """{"id": 7, "orderTime": "2024-01-01T00:00:02Z", "amount": 10, "currency": "EUR"}"""
       val hit = (rows: Array[String]) =>
         rows.exists(r => r.contains("\"id\":7") && r.contains("\"converted_amount\":30"))
       def read() = spark.sql("SELECT value FROM enriched").as[String].collect()
-      // the assertion under test is the pipeline's SEMANTICS (the
-      // enrichment join fires end to end); exactly-once delivery has
-      // its own specs (t8 restart, AlertSink). Under full-suite load
-      // the MemoryStream harness occasionally loses the first feed's
-      // race with query startup, so the feed re-drives up to 3 times —
-      // duplicates cannot fake the asserted row into existence, only
-      // give the join another batch to emit it.
-      var rows = Array.empty[String]
-      var attempt = 0
-      while (attempt < 3 && !hit(rows)) {
-        if (attempt > 0) {
-          // a re-drive may only compensate for WITHHELD output (the
-          // no-data watermark batch racing processAllAvailable), never
-          // for lost input: if the prior feed's rows were not consumed
-          // at all, re-feeding would hide a source-side first-batch
-          // data-loss regression — fail loudly instead.
-          val consumed = q.recentProgress.map(_.numInputRows).sum
-          assert(consumed > 0,
-            s"prior feed's rows were never consumed (progress: " +
-              q.recentProgress.map(p => s"batch ${p.batchId}: in=${p.numInputRows}")
-                .mkString(", ") + ") — input loss, not an output race")
-        }
-        rates.addData(rateJson)
-        orders.addData(orderJson)
-        q.processAllAvailable()
-        rows = eventually(read())(hit, timeoutMs = 10000L)
-        attempt += 1
-      }
-      assert(hit(rows), s"expected enriched order after $attempt feeds, " +
-        s"got [${rows.mkString("; ")}]; progress: " +
-        q.recentProgress.map(p => s"batch ${p.batchId}: in=${p.numInputRows}")
+      rates.addData(rateJson("EUR", 3))
+      orders.addData(orderJson(7, "EUR"))
+      q.processAllAvailable()
+      val rows = eventually(read())(hit, timeoutMs = 10000L)
+      assert(hit(rows), s"expected enriched order, got [${rows.mkString("; ")}]; " +
+        "progress: " + q.recentProgress.map(p => s"batch ${p.batchId}: in=${p.numInputRows}")
           .mkString(", "))
     } finally q.stop()
+  }
+
+  /** Enrichment pipeline over two MemoryStreams; every emitted JSON line
+    * lands in the returned buffer before its batch commits. */
+  def startEnrichment(checkpoint: Option[String] = None): (MemoryStream[String],
+      MemoryStream[String], StreamingQuery, collection.mutable.Buffer[String]) = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val orders = MemoryStream[String]
+    val rates = MemoryStream[String]
+    val lines = collection.mutable.ArrayBuffer[String]()
+    val w = OrderEnrichmentJob.pipeline(
+        orders.toDF().toDF("value"), rates.toDF().toDF("value"),
+        Duration.ofSeconds(5))
+      .writeStream.foreachBatch {
+        (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          val got = b.as[String].collect()
+          lines.synchronized { lines ++= got }
+          ()
+      }
+    val q = checkpoint.fold(w)(w.option("checkpointLocation", _)).start()
+    (orders, rates, q, lines)
+  }
+
+  test("a rates-only trigger keeps its rates in join state (no bloom on stream-stream joins)") {
+    val (orders, rates, q, lines) = startEnrichment()
+    try {
+      def lastPlan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.optimizedPlan
+      // the rate arrives in a trigger of its own: the orders side of
+      // that trigger is empty, and a bloom built from it would reject
+      // the rate before it reaches join state
+      rates.addData(rateJson("EUR", 3))
+      q.processAllAvailable()
+      val ratesOnly = lastPlan
+      orders.addData(orderJson(8, "EUR"))
+      q.processAllAvailable()
+      assert(lines.exists(r => r.contains("\"id\":8") && r.contains("\"converted_amount\":30")),
+        s"order 8 must match the rate of the earlier trigger: [${lines.mkString("; ")}]")
+      for (plan <- Seq(ratesOnly, lastPlan))
+        assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[BloomMightContain]))),
+          s"stream-stream join got a bloom prefilter:\n$plan")
+    } finally q.stop()
+  }
+
+  test("join state: one RocksDB store per partition; a format-2 checkpoint keeps its 16") {
+    def instances(q: StreamingQuery) =
+      q.lastProgress.stateOperators.map(_.numStateStoreInstances).sum
+    val (orders, rates, fresh, _) = startEnrichment()
+    try {
+      rates.addData(rateJson("EUR", 3))
+      orders.addData(orderJson(1, "EUR"))
+      fresh.processAllAvailable()
+      assert(instances(fresh) == 4, "format 3: one store per shuffle partition")
+    } finally fresh.stop()
+
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_join_fmt2").toString
+    val formatKey = "spark.sql.streaming.join.stateFormatVersion"
+    spark.conf.set(formatKey, "2")
+    val (_, r2, before, _) =
+      try startEnrichment(Some(ckpt)) finally spark.conf.unset(formatKey)
+    try {
+      r2.addData(rateJson("USD", 4))
+      before.processAllAvailable()
+      assert(instances(before) == 16, "format 2: four stores per shuffle partition")
+    } finally before.stop()
+    // restarted under the session's default format: the checkpoint's
+    // format wins, and the rate stored before the restart still matches
+    val (o3, r3, after, lines) = startEnrichment(Some(ckpt))
+    try {
+      // the new source is rebuilt up to the offset the checkpoint
+      // committed; that rate is not read again
+      r3.addData(rateJson("USD", 4))
+      o3.addData(orderJson(2, "USD"))
+      after.processAllAvailable()
+      assert(instances(after) == 16, "a restart keeps the checkpoint's state format")
+      assert(lines.exists(r => r.contains("\"id\":2") && r.contains("\"converted_amount\":40")),
+        s"order 2 must match the rate stored before the restart: [${lines.mkString("; ")}]")
+    } finally after.stop()
   }
 
   test("streaming corpus ingest: cross-batch dedup, pii masked, analysis columns") {
