@@ -5,8 +5,15 @@ import org.apache.spark.sql.SparkSession
 /** Session factory with scale-oriented defaults: AQE (runtime re-plan +
   * skew-join splitting), shuffle partitions sized to the deployment (32
   * for local[32]; set to ~2-3x total cores on a real cluster), UTC
-  * session time for deterministic event-time semantics, and graft's
-  * SQL extensions (custom expressions) installed.
+  * session time for deterministic event-time semantics, graft's SQL
+  * extensions (custom expressions) installed, and `file:` paths served
+  * by [[graft.shims.NioRawLocalFileSystem]]: Hadoop's local file system
+  * with modes set and symlinks checked through NIO instead of forked
+  * `chmod` / `readlink` processes (same files, modes, `.crc` files and
+  * atomic renames). Hadoop caches FileSystem instances by scheme and
+  * user, not by conf, so a `file:` FileSystem created in the JVM before
+  * the first graft session keeps Hadoop's class; FileContext, which
+  * streaming checkpoints and state stores write through, is not cached.
   */
 object GraftSession {
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
@@ -50,6 +57,9 @@ object GraftSession {
       // restarted from an older checkpoint keeps that checkpoint's format.
       .config("spark.sql.streaming.join.stateFormatVersion", "3")
       .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.shims.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.shims.NioLocalFs].getName)
 
   /** Local session for tests / exploration. */
   def local(cores: Int = 4): SparkSession = {

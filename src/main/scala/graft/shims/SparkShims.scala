@@ -105,24 +105,13 @@ object SparkShims {
     // was A/B'd twice on the checkpoint-heavy set (g2/g4/g7/g8/g11/
     // g12/g17/x32, BENCH_ONLY sf0.1/32c): stats-less 36.4/33.2 s,
     // capped 34.1/41.4 s — flat within host noise, slightly worse on
-    // average, and per-query winners flipped between repeats. Default
-    // stays stats-less; the env gate (SPARK_GRAFT_CKPT_CAPPED_STATS=1)
-    // remains for re-measurement on a quieter host.
-    val originStats =
-      if (!sys.env.get("SPARK_GRAFT_CKPT_CAPPED_STATS").contains("1")) None
-      else {
-        val thresh = spark.asInstanceOf[
-          org.apache.spark.sql.classic.SparkSession]
-          .sessionState.conf.autoBroadcastJoinThreshold
-        Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
-          sizeInBytes = qe.optimizedPlan.stats.sizeInBytes
-            .min(BigInt(thresh) + 1)))
-      }
+    // average, and per-query winners flipped between repeats. So the
+    // checkpoint stays stats-less.
     org.apache.spark.sql.classic.Dataset.ofRows(spark,
       org.apache.spark.sql.execution.LogicalRDD(
         qe.analyzed.output, rdd, finalPlan.outputPartitioning,
         finalPlan.outputOrdering, false, None)(spark,
-        originStats = originStats).newInstance())
+        originStats = None).newInstance())
   }
 
   /** Serializable wrapper for a Hadoop Configuration (the class Spark

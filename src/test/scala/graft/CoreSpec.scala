@@ -240,4 +240,59 @@ class CoreSpec extends AnyFunSuite {
     assert(math.abs(sims(0) - 1.0) < 1e-12)
     assert(math.abs(sims(1)) < 1e-12)
   }
+
+  test("NIO local file system: Hadoop's modes, renames and link status") {
+    import java.io.FileNotFoundException
+    import java.nio.file.{Files, Paths}
+    import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, Options,
+      Path, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import graft.shims.{NioLocalFileSystem, NioRawLocalFileSystem}
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(FileSystem.get(new java.net.URI("file:///"), conf).isInstanceOf[NioLocalFileSystem])
+    val root = Files.createTempDirectory("graft_nio_fs")
+    def init(fs: RawLocalFileSystem) = { fs.initialize(new java.net.URI("file:///"), conf); fs }
+    val ours = init(new NioRawLocalFileSystem)
+    val hadoop = init(new RawLocalFileSystem)
+    def mode(p: String) = Files.getAttribute(Paths.get(p), "unix:mode").asInstanceOf[Int] & 0xfff
+    def octal(s: String) = new FsPermission(Integer.parseInt(s, 8).toShort)
+
+    // create, mkdirs and setPermission leave the same modes
+    for ((name, fs) <- Seq("ours" -> ours, "hadoop" -> hadoop)) {
+      fs.create(new Path(s"$root/$name.f")).close()
+      fs.mkdirs(new Path(s"$root/$name.d/sub"))
+      fs.create(new Path(s"$root/$name.600")).close()
+      fs.setPermission(new Path(s"$root/$name.600"), octal("600"))
+      fs.setPermission(new Path(s"$root/$name.d"), octal("1777"))
+    }
+    for ((suffix, want) <- Seq(".f" -> "644", ".d/sub" -> "755", ".600" -> "600",
+        ".d" -> "1777")) {
+      assert(mode(s"$root/ours$suffix") == mode(s"$root/hadoop$suffix"), suffix)
+      assert(mode(s"$root/ours$suffix") == Integer.parseInt(want, 8), suffix)
+    }
+
+    // FileContext (checkpoint writes) renames over an existing target
+    val fc = FileContext.getFileContext(root.toUri, conf)
+    def write(p: Path, text: String): Unit = {
+      val out = fc.create(p, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
+      try out.write(text.getBytes) finally out.close()
+    }
+    val src = new Path(root.toUri.toString, "src")
+    val dst = new Path(root.toUri.toString, "dst")
+    write(src, "new"); write(dst, "old")
+    fc.rename(src, dst, Options.Rename.OVERWRITE)
+    assert(new String(Files.readAllBytes(Paths.get(s"$root/dst"))) == "new")
+    assert(!Files.exists(Paths.get(s"$root/src")))
+    assert(Files.exists(Paths.get(s"$root/.dst.crc")), "the renamed file keeps its .crc")
+
+    // link status: a missing path throws; a symlink reads as Hadoop reads it
+    val missing = new Path(root.toUri.toString, "missing")
+    intercept[FileNotFoundException](ours.getFileLinkStatus(missing))
+    intercept[FileNotFoundException](fc.getFileLinkStatus(missing))
+    Files.createSymbolicLink(Paths.get(s"$root/link"), Paths.get(s"$root/dst"))
+    def view(s: FileStatus) = (s.getPath, s.isFile, s.isSymlink,
+      if (s.isSymlink) s.getSymlink else null, s.getLen, s.getPermission)
+    for (link <- Seq(new Path(s"$root/link"), new Path(root.toUri.toString, "link")))
+      assert(view(ours.getFileLinkStatus(link)) == view(hadoop.getFileLinkStatus(link)), link)
+  }
 }

@@ -138,6 +138,39 @@ class StreamingSpec extends AnyFunSuite {
     } finally after.stop()
   }
 
+  test("a checkpointed trigger forks no chmod or readlink; files keep modes and checksums") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.PosixFilePermissions
+    import scala.jdk.CollectionConverters._
+    val ckpt = Files.createTempDirectory("graft_nofork").toString
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      val (orders, rates, q, lines) = startEnrichment(Some(ckpt))
+      try {
+        rates.addData(rateJson("EUR", 3))
+        q.processAllAvailable()
+        orders.addData(orderJson(9, "EUR"))
+        q.processAllAvailable()
+        assert(q.lastProgress.batchId >= 1, "at least two triggers ran")
+        assert(lines.exists(r => r.contains("\"id\":9") && r.contains("\"converted_amount\":30")),
+          s"order 9 must match the rate of the earlier trigger: [${lines.mkString("; ")}]")
+      } finally q.stop()
+    } finally rec.stop()
+    val jfr = Files.createTempFile("graft_nofork", ".jfr")
+    try rec.dump(jfr) finally rec.close()
+    val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+      .map(_.getString("command"))
+      .filter(c => c.startsWith("chmod") || c.startsWith("readlink"))
+    Files.delete(jfr)
+    assert(forks.isEmpty,
+      s"${forks.size} chmod/readlink forks, e.g. ${forks.take(3).mkString("; ")}")
+    val offsets0 = Paths.get(ckpt, "offsets", "0")
+    assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(offsets0)) == "rw-r--r--")
+    assert(Files.exists(Paths.get(ckpt, "offsets", ".0.crc")), "the WAL file keeps its .crc")
+  }
+
   test("streaming corpus ingest: cross-batch dedup, pii masked, analysis columns") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
