@@ -70,126 +70,47 @@ object GraftDml extends PredicateHelper {
     try new java.net.URI(s).getPath
     catch { case _: java.net.URISyntaxException => norm(s) }
 
-  /** Scheme-independent file key shared by the SQL side
-    * (input_file_name URIs) and the driver side (manifest paths):
-    * md5 of the last three path segments — batchDir/partition/file,
-    * unique within one table. Both sides hash the DECODED (true
-    * on-disk) segment chars — [[fileKeyCol]] percent-decodes the
-    * input_file_name URI first — so Hive-escaped partition values
-    * (spaces, ':', '%') cannot make the two domains disagree. The 'k'
-    * prefix keeps the key NON-NUMERIC so a staged `__fk=<key>`
-    * partition directory can never be re-inferred as a numeric
-    * partition column (an all-digit md5 would otherwise read back as
-    * DECIMAL and drop leading zeros — a silent key mismatch). */
-  private[plans] def fileKey(path: String, levels: Int = 1): String = {
-    val tail = norm(path).split('/').takeRight(levels + 2).mkString("/")
-    "k" + java.security.MessageDigest.getInstance("MD5")
-      .digest(tail.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  /** [[fileKey]] as a codegen'd expression over a file-name column —
-    * `levels` (partition column count) keeps the hashed tail spanning
-    * batchDir/partition-chain/file on multi-level layouts. The tail is
-    * split on the ENCODED string ('/' is never percent-encoded in a
-    * URI path, and an escaped value's `%2F` arrives double-encoded as
-    * `%252F`, so segment boundaries are exact), then decoded into the
-    * on-disk domain [[fileKey]] hashes. `url_decode` is form-decoding
-    * ('+' -> space), so literal '+' is pre-escaped to `%2B` first. */
-  private[plans] def fileKeyCol(fileName: Column,
-      levels: Int = 1): Column = {
-    import org.apache.spark.sql.functions.{concat, md5, regexp_replace, substring_index, url_decode}
-    concat(lit("k"), md5(url_decode(regexp_replace(
-      substring_index(fileName, "/", -(levels + 2)), "\\+", "%2B"))))
-  }
-
   /** Batch root `levels + 1` parents above a data file (levels =
     * partition column count) — the basePath partition discovery needs. */
   private[plans] def batchRootOf(file: String, levels: Int): String =
     (0 until levels).foldLeft(new Path(file).getParent)(
       (p, _) => p.getParent).toString
 
-  /** ONE distributed rewrite job over ALL touched files — the scale
-    * shape of every CoW rewrite (DELETE/UPDATE/MERGE/OPTIMIZE):
-    * instead of one single-task Spark job per touched file (whose
-    * driver-side scheduling loop becomes the wall clock at 10⁴–10⁵
-    * touched files, with no backpressure on the Future fan-out), the
-    * touched files are read as one scan tagged with their file key,
-    * `transform` applies the rewrite uniformly, and ONE
-    * dynamic-partitioned write lands every output under
-    * `_rw/__fk=<key>/`. The driver then renames each key's files into
-    * the per-file name the manifest expects — O(touched files)
-    * metadata work, ZERO extra jobs.
-    *
-    * Without `shufflePerFk` the plan is shuffle-free: the scan's
-    * tasks sort (key, cluster) locally and the dynamic writer splits
-    * by key, so per-file output content (and its footer stats) is
-    * exactly what the per-file jobs produced — a task that got a
-    * coalesced run of small files just writes one output per key.
-    * `shufflePerFk` adds a hash exchange on the key for transforms
-    * whose own joins scatter a file's rows across tasks (MERGE), so
-    * each rewritten file stays ONE output file.
-    *
-    * `transform` must preserve the `__fk` column on its output rows. */
+  /** Read data files pinned to `readSchema`, each immutable batch dir
+    * its own basePath (one basePath cannot span versions), so the
+    * directory-encoded partition columns come back with the rows. */
+  private[plans] def readRestored(spark: SparkSession,
+      readSchema: org.apache.spark.sql.types.StructType,
+      files: Seq[String], levels: Int): DataFrame = files
+    .groupBy(f => batchRootOf(f, levels))
+    .toSeq.sortBy(_._1)
+    .map { case (base, group) =>
+      FileManifest.pinnedReader(spark, readSchema)
+        .option("basePath", base)
+        .parquet(group.sorted: _*)
+    }
+    .reduce(_.unionByName(_))
+
+  /** The SQL side of the staged rewrite (DELETE/UPDATE/MERGE): the
+    * touched files, read through [[readRestored]], rewrite one-to-one
+    * in ONE job via [[FileManifest.rewriteStaged]] into `dataDir`'s
+    * partition dirs as `<prefix>-<i>-…`, footer-statted per partition.
+    * `exchange` is for transforms whose own joins scatter a file's
+    * rows across tasks (MERGE), so each rewritten file stays ONE
+    * output file. `transform` must preserve the `__fk` column. */
   private[plans] def distributedRewrite(spark: SparkSession,
       readSchema: org.apache.spark.sql.types.StructType,
       dataCols: Seq[String], clusterCol: String,
       touchedList: Seq[(String, String)], dataDir: String, prefix: String,
-      transform: DataFrame => DataFrame, shufflePerFk: Boolean,
+      transform: DataFrame => DataFrame, exchange: Boolean,
       levels: Int = 1)
       : Map[String, Seq[FileManifest.FileStats]] = {
-    require(!dataCols.contains("__fk"),
-      "graft DML: the table must not carry a `__fk` column (reserved)")
-    val fs = new Path(dataDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val fkInfo: Map[String, (String, Int)] = touchedList.zipWithIndex.map {
-      case ((part, path), i) => fileKey(path, levels) -> ((part, i))
-    }.toMap
-    require(fkInfo.size == touchedList.size,
-      "graft DML: file-key collision across touched files")
-    val src = touchedList.map(_._2)
-      .groupBy(f => batchRootOf(f, levels))
-      .toSeq.sortBy(_._1)
-      .map { case (base, group) =>
-        FileManifest.pinnedReader(spark, readSchema)
-          .option("basePath", base)
-          .parquet(group.sorted: _*)
-      }
-      .reduce(_.unionByName(_))
-      .withColumn("__fk", fileKeyCol(input_file_name(), levels))
-    val out0 = transform(src)
-    val out = if (shufflePerFk) out0.repartition(col("__fk")) else out0
-    val rwTmp = s"$dataDir/_rw"
-    // re-stamp the schema's field ids before the write: the transform
-    // (when/otherwise, casts, joins) drops column metadata, and an
-    // id-mapped table's files without ids would refuse every read
-    FileManifest.stampFieldIds(
-        out.select((dataCols.map(col) :+ col("__fk")): _*), readSchema)
-      .sortWithinPartitions(col("__fk"), col(clusterCol))
-      .write.mode(SaveMode.Overwrite).partitionBy("__fk").parquet(rwTmp)
-    val moved: Seq[(String, String)] = fs.listStatus(new Path(rwTmp)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__fk="))
-      .sortBy(_.getPath.getName)
-      .flatMap { d =>
-        val fk = d.getPath.getName.stripPrefix("__fk=")
-        val (part, i) = fkInfo.getOrElse(fk,
-          sys.error(s"graft DML: unexpected rewrite key $fk"))
-        val destDir = new Path(dataDir, part)
-        fs.mkdirs(destDir)
-        fs.listStatus(d.getPath).toSeq
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .map { st =>
-            val dest = new Path(destDir,
-              prefix + f"-$i%05d-" + st.getPath.getName)
-            require(fs.rename(st.getPath, dest),
-              s"graft DML: rewrite move failed: $dest")
-            part -> fs.makeQualified(dest).toString
-          }
-      }
-    fs.delete(new Path(rwTmp), true)
-    moved.groupBy(_._1).map { case (part, files) =>
-      part -> FileManifest.append(Nil, spark, files.map(_._2), clusterCol)
-        .filter(_.rows > 0)
-    }
+    val files = touchedList.map(_._2)
+    FileManifest.rewriteStaged(readRestored(spark, readSchema, files, levels),
+      files.map(Seq(_)), binned = false, levels, dataCols, clusterCol,
+      Some(readSchema), exchange, s"$dataDir/_rw", dataDir,
+      Some(clusterCol))(transform)(
+      i => (touchedList(i)._1, prefix + f"-$i%05d-"))
   }
 
   /** Strip aliases down to the graft relation, if this is one. */
@@ -265,23 +186,10 @@ object GraftDml extends PredicateHelper {
       .flatMap(_.files.map(_.getPath.toString))
     if (candidates.isEmpty) return FileManifest.latestVersion(spark, root).get
 
-    // every batch dir is its own basePath (immutable data/b<N> roots —
-    // one basePath cannot span versions); group and union, restoring
-    // the directory-encoded partition column for the predicate
-    def readRestored(files: Seq[String]) = files
-      .groupBy(f => batchRootOf(f, levels))
-      .toSeq.sortBy(_._1)
-      .map { case (base, group) =>
-        FileManifest.pinnedReader(spark, readSchema)
-          .option("basePath", base)
-          .parquet(group.sorted: _*)
-      }
-      .reduce(_.unionByName(_))
-
     // 2. TOUCH: which candidates actually hold matching rows. The
     // collect is O(touched file names) — catalog-scale, never rows
     val condCol = asColumn(cond)
-    val touched = readRestored(candidates)
+    val touched = readRestored(spark, readSchema, candidates, levels)
       .where(condCol)
       .select(input_file_name().as("f")).distinct()
       .collect().map(r => normInput(r.getString(0))).toSet
@@ -310,7 +218,7 @@ object GraftDml extends PredicateHelper {
             case None => col(c)
           }
         }: _*),
-      shufflePerFk = false, levels = levels)
+      exchange = false, levels = levels)
 
     // WRITE-TIME CONSTRAINTS: an UPDATE's rewritten rows must satisfy
     // every declared CHECK before the commit makes them visible — a
@@ -596,16 +504,6 @@ object GraftDml extends PredicateHelper {
           .flatMap(_.files.map(_.getPath.toString))
       }
 
-    def readRestored(files: Seq[String]): DataFrame = files
-      .groupBy(f => batchRootOf(f, levels))
-      .toSeq.sortBy(_._1)
-      .map { case (base, group) =>
-        FileManifest.pinnedReader(spark, readSchema)
-          .option("basePath", base)
-          .parquet(group.sorted: _*)
-      }
-      .reduce(_.unionByName(_))
-
     val next = FileManifest.latestVersion(spark, root).get + 1
     // uniquely-suffixed batch dir: see cowRewriteCommit
     val dataDir = s"$root/data/b$next-" +
@@ -624,7 +522,7 @@ object GraftDml extends PredicateHelper {
     val touched: Seq[String] =
       if (candidates.isEmpty) Nil
       else {
-        val cand = readRestored(candidates)
+        val cand = readRestored(spark, readSchema, candidates, levels)
         val candId = cand
           .withColumn("__f", input_file_name())
           .withColumn("__rid", monotonically_increasing_id())
@@ -646,7 +544,7 @@ object GraftDml extends PredicateHelper {
           // distinct is safe AFTER the cardinality gate (identical
           // duplicate source rows would have tripped it)
           joined
-            .select((fileKeyCol(col("__f"), levels).as("__fk") ::
+            .select((FileManifest.fileKeyCol(col("__f"), levels).as("__fk") ::
               src.columns.toList.map(c => col(s"_s.$c"))): _*)
             .distinct()
             .write.mode(SaveMode.Overwrite).partitionBy("__fk").parquet(stage)
@@ -685,7 +583,7 @@ object GraftDml extends PredicateHelper {
     // meet exactly its own staged slice, a candidate with no slice
     // (in play via by-source actions only) matches nothing and every
     // row lands unmatched, exactly the per-file semantics. The WHEN
-    // cascade applies uniformly; shufflePerFk keeps each rewritten
+    // cascade applies uniformly; the exchange keeps each rewritten
     // file ONE output file (the join scatters a file's rows).
     val mDel = m.matchedActions.zipWithIndex.collect {
       case (_: DeleteAction, i2) => i2 }.toSet
@@ -751,7 +649,7 @@ object GraftDml extends PredicateHelper {
                 .cast(f.dataType).as(c)
             }.toSeq :+ col("_t.__fk").as("__fk"): _*)
         },
-        shufflePerFk = true, levels = levels)
+        exchange = true, levels = levels)
 
     // 4. INSERT — source rows with no match among the candidates
     // (exact: pruning is conservative, every possible partner survived)
@@ -761,7 +659,8 @@ object GraftDml extends PredicateHelper {
         val unmatched =
           if (candidates.isEmpty) src.drop("__m")
           else src.as("_s").join(
-            readRestored(candidates).as("_t"), joinCond, "left_anti")
+            readRestored(spark, readSchema, candidates, levels).as("_t"),
+            joinCond, "left_anti")
             .drop("__m")
         val iActs = m.notMatchedActions.collect { case i: InsertAction => i }
         val iAct = iActs.zipWithIndex.foldLeft(Option.empty[Column]) {
@@ -806,23 +705,11 @@ object GraftDml extends PredicateHelper {
             .write.mode(SaveMode.Overwrite)
             .partitionBy(partCols: _*).parquet(insDir)
           ins.unpersist()
-          FileManifest.listLeafPartitions(fs, new Path(insDir)).map {
-            case (part, files) =>
-            val moved = files.zipWithIndex.map { case (st, k) =>
-              val destDir = new Path(dataDir, part)
-              fs.mkdirs(destDir)
-              val dest = new Path(destDir, f"ins-$k%05d-${st.getPath.getName}")
-              require(fs.rename(st.getPath, dest),
-                s"MERGE insert move failed: $dest")
-              fs.makeQualified(dest).toString
-            }
-            part -> FileManifest.append(Nil, spark, moved, clusterCol)
-              .filter(_.rows > 0)
-          }.toMap
+          FileManifest.adoptStaged(spark, insDir, dataDir,
+            Some(clusterCol))(part => (part, "ins-"))
         }
       }
     fs.delete(new Path(stage), true)
-    fs.delete(new Path(s"$dataDir/_ins"), true)
 
     if (rewriteSet.isEmpty && insertedStats.isEmpty) {
       // nothing matched, nothing inserted: MERGE is a committed no-op

@@ -375,73 +375,27 @@ object GraftMaintenance {
     // uniquely-suffixed batch dir: see GraftDml.cowRewriteCommit
     val dataDir = s"$root/data/b$next-" +
       java.util.UUID.randomUUID.toString.take(8)
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     // bins may mix files from before and after an ADD COLUMN
     // evolution: pin the read to the catalog-tracked schema so old
     // files null-fill and the compacted output is schema-uniform
     val binSchema = FileManifest.schemaAt(spark, root)
 
-    // ONE distributed job for every bin (the GraftDml.distributedRewrite
-    // shape): inputs read as one scan, each row routed to its bin via a
-    // broadcast (fileKey → bin) map — manifest-sized — then one hash
-    // exchange on the bin id merges each bin into exactly one
-    // cluster-sorted output file under `_cmp/__bin=<i>/`. Driver work is
-    // O(bins) renames; at 10⁴–10⁵ bins the old Future-per-bin loop made
-    // driver job scheduling the wall clock.
-    val binFiles: Seq[(Int, String)] = work.zipWithIndex.flatMap {
-      case ((_, bin), i) => bin.map(f => (i, f.path))
-    }
-    val levels = index.partitionColumns.size
-    val binOfFk = binFiles.map { case (i, p) =>
-      (GraftDml.fileKey(p, levels), i) }
-    require(binOfFk.map(_._1).distinct.size == binOfFk.size,
-      "OPTIMIZE: file-key collision across bin inputs")
-    import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
-    val mapDf = spark.createDataFrame(binOfFk).toDF("__fk", "__bin")
+    // ONE distributed job for every bin (FileManifest.rewriteStaged,
+    // binned): each row routed to its bin, one hash exchange on the
+    // bin id merges each bin into exactly one cluster-sorted file
+    val bins = work.map(_._2.map(_.path))
     // field-id matched read (inert pre-ids): bins may hold files from
     // before a RENAME, whose old physical names only the ids resolve
     val reader = binSchema.fold(spark.read)(
       FileManifest.pinnedReader(spark, _))
-    val cmpTmp = s"$dataDir/_cmp"
-    val srcDf = reader.parquet(binFiles.map(_._2).sorted: _*)
-    val outCols = srcDf.columns.toSeq
-    val binOut = srcDf
-      .withColumn("__fk", GraftDml.fileKeyCol(input_file_name(), levels))
-      .join(broadcast(mapDf), "__fk")
-      .select((outCols.map(col) :+ col("__bin")): _*)
-    // re-stamp field ids (the join/select drops column metadata)
-    binSchema.fold(binOut)(FileManifest.stampFieldIds(binOut, _))
-      .repartition(col("__bin"))
-      .sortWithinPartitions(col("__bin"), col(clusterCol))
-      .write.mode(SaveMode.Overwrite).partitionBy("__bin").parquet(cmpTmp)
-    val rewritten: Seq[(String, String)] =
-      fs.listStatus(new Path(cmpTmp)).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("__bin="))
-        .sortBy(_.getPath.getName)
-        .flatMap { d =>
-          val i = d.getPath.getName.stripPrefix("__bin=").toInt
-          val part = work(i)._1
-          val destDir = new Path(dataDir, part)
-          fs.mkdirs(destDir)
-          fs.listStatus(d.getPath).toSeq
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .map { st =>
-              val dest = new Path(destDir,
-                f"cmp-$i%05d-${st.getPath.getName}")
-              require(fs.rename(st.getPath, dest),
-                s"OPTIMIZE move failed: $dest")
-              part -> fs.makeQualified(dest).toString
-            }
-        }
-    fs.delete(new Path(cmpTmp), true)
-    val fresh = rewritten.groupBy(_._1).map { case (part, moved) =>
-      part -> FileManifest.append(Nil, spark, moved.map(_._2), clusterCol)
-        .filter(_.rows > 0)
-    }
+    val srcDf = reader.parquet(bins.flatten.sorted: _*)
+    val fresh = FileManifest.rewriteStaged(srcDf, bins, binned = true,
+      index.partitionColumns.size, srcDf.columns.toSeq, clusterCol,
+      binSchema, exchange = true, s"$dataDir/_cmp", dataDir,
+      Some(clusterCol))(identity)(i => (work(i)._1, f"cmp-$i%05d-"))
     // commit with optimistic retry: compaction touches exactly the
     // multi-file bins' inputs; a racing disjoint-file commit commutes
-    val touched = binFiles.map(f => GraftDml.norm(f._2)).toSet
+    val touched = bins.flatten.map(GraftDml.norm).toSet
     GraftDml.commitCowRetrying(spark, root, index, touched, fresh,
       meta = Map("operation" -> "optimize"),
       emptyMsg = "OPTIMIZE produced an empty table — corrupt bin plan")
@@ -500,17 +454,9 @@ object GraftMaintenance {
     val readSchema = StructType(dataSchema.fields ++
       index.partitionSchema.fields
         .filterNot(f => dataSchema.fieldNames.contains(f.name)))
-    def readRestored(files: Seq[String]) = files
-      .groupBy(f => GraftDml.batchRootOf(f, levels))
-      .toSeq.sortBy(_._1)
-      .map { case (base, group) =>
-        FileManifest.pinnedReader(spark, readSchema)
-          .option("basePath", base).parquet(group.sorted: _*)
-      }
-      .reduce(_.unionByName(_))
     val allFiles = pm.partitions.toSeq.sortBy(_._1)
       .flatMap(_._2.map(_.path))
-    val src = readRestored(allFiles)
+    val src = GraftDml.readRestored(spark, readSchema, allFiles, levels)
     // global per-dimension bounds: ONE tiny aggregate (metadata-light
     // relative to the full rewrite this statement is)
     val r = src.agg(min(col(xCol)).cast("long"), max(col(xCol)).cast("long"),
@@ -561,23 +507,8 @@ object GraftMaintenance {
       .partitionBy(partCols: _*).parquet(zTmp)
     // adopt-by-move into the immutable batch dir, stat, commit with
     // touched = every live file (the full-rewrite contract)
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val fresh: Map[String, Seq[FileManifest.FileStats]] =
-      FileManifest.listLeafPartitions(fs, new Path(zTmp))
-        .map { case (part, sts) =>
-          val destDir = new Path(dataDir, part)
-          fs.mkdirs(destDir)
-          val moved = sts.zipWithIndex.map { case (st, k) =>
-              val dest = new Path(destDir, f"zo-$k%05d-${st.getPath.getName}")
-              require(fs.rename(st.getPath, dest),
-                s"OPTIMIZE ZORDER move failed: $dest")
-              fs.makeQualified(dest).toString
-            }
-          part -> FileManifest.append(Nil, spark, moved, clusterCol)
-            .filter(_.rows > 0)
-        }.toMap
-    fs.delete(new Path(zTmp), true)
+    val fresh = FileManifest.adoptStaged(spark, zTmp, dataDir,
+      Some(clusterCol))(part => (part, "zo-"))
     val touched = allFiles.map(GraftDml.norm).toSet
     GraftDml.commitCowRetrying(spark, root, index, touched, fresh,
       meta = Map("operation" -> "optimize-zorder"),
@@ -1486,7 +1417,7 @@ case class GraftAnalyzeCommand(table: String, columns: Seq[String])
   * RENAME COLUMN and safe re-ADD of dropped names on tables that
   * predate f37: mint ids for the current schema, rewrite EVERY live
   * file in ONE distributed job stamping the ids into the parquet
-  * schemas (per-file one-to-one — the shuffle-free distributedRewrite
+  * schemas (per-file one-to-one — the shuffle-free staged rewrite
   * shape, so file layout, clustering ranges, and footer stats carry),
   * and commit adds+removes+schema as one atomic version via the
   * optimistic CoW retry. Idempotent: an already-mapped table is a
@@ -1523,7 +1454,7 @@ case class GraftUpgradeFieldIdsCommand(table: String)
     val fresh = GraftDml.distributedRewrite(spark, readSchema,
       base.fieldNames.toSeq, index.clusterColumn, touchedList, dataDir,
       "fid", transform = df => FileManifest.stampFieldIds(df, evolved),
-      shufflePerFk = false, levels = levels)
+      exchange = false, levels = levels)
     val touched = touchedList.map(t => GraftDml.norm(t._2)).toSet
     GraftDml.commitCowRetrying(spark, root, index, touched, fresh,
       meta = Map("operation" -> "upgrade-field-ids",

@@ -30,11 +30,11 @@ import graft.functions.{BloomAgg, BloomMightContain}
   * row-level filtering; this rule is the engine-native form over
   * graft's mergeable BloomAgg, and composes with AQE untouched.)
   *
-  * Heuristics, all conf-tunable: build side stats at most
-  * `maxBuildBytes` (the bloom build must be cheap and its n small
-  * enough for the configured bit count to stay selective), probe side
-  * at least `minProbeBytes` (below that the shuffle being saved costs
-  * less than the extra aggregate), and probe at least 4x build (a
+  * Heuristics: build side stats at most [[MaxBuildBytes]] (the bloom
+  * build must be cheap and its n small enough for the stats-sized bit
+  * count to stay selective), probe side at least `minProbeBytes` (a
+  * conf; below that the shuffle being saved costs less than the extra
+  * aggregate), and probe at least 4x build (a
   * near-symmetric join gains nothing). Conservative defaults keep the
   * rule dormant on small data; a 100 TB probe against a bounded build
   * side is exactly when it fires. Stream-stream joins never get it:
@@ -42,10 +42,9 @@ import graft.functions.{BloomAgg, BloomMightContain}
   */
 object InjectBloomJoinFilter extends Rule[LogicalPlan] with PredicateHelper {
   val EnabledKey = "spark.graft.bloomJoin.enabled"
-  val MaxBuildKey = "spark.graft.bloomJoin.maxBuildBytes"
   val MinProbeKey = "spark.graft.bloomJoin.minProbeBytes"
-  val NumBitsKey = "spark.graft.bloomJoin.numBits"
-  val NumHashesKey = "spark.graft.bloomJoin.numHashes"
+  private val MaxBuildBytes = 8L << 20
+  private val NumHashes = 5
 
   private def long(conf: SQLConf, key: String, dflt: Long): Long =
     conf.getConfString(key, dflt.toString).toLong
@@ -53,12 +52,7 @@ object InjectBloomJoinFilter extends Rule[LogicalPlan] with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val conf = SQLConf.get
     if (!conf.getConfString(EnabledKey, "true").toBoolean) return plan
-    val maxBuild = long(conf, MaxBuildKey, 8L << 20)
     val minProbe = long(conf, MinProbeKey, 64L << 20)
-    // numBits = 0 (the default) sizes the filter from the build side's
-    // stats at injection time; a positive conf value pins it
-    val numBitsConf = long(conf, NumBitsKey, 0L).toInt
-    val numHashes = long(conf, NumHashesKey, 5L).toInt
 
     // Side-eligibility by join type. A side may be bloom-filtered only
     // when its non-matching rows cannot appear in the result:
@@ -123,31 +117,30 @@ object InjectBloomJoinFilter extends Rule[LogicalPlan] with PredicateHelper {
           case Some((lk, rk)) if lk.deterministic && rk.deterministic &&
               !selfDerived && !derivedLeaf(left) && !derivedLeaf(right) =>
             val (ls, rs) = (left.stats.sizeInBytes, right.stats.sizeInBytes)
-            if (canFilterLeft(jt) && rs <= maxBuild && ls >= minProbe &&
+            if (canFilterLeft(jt) && rs <= MaxBuildBytes && ls >= minProbe &&
                 ls >= rs * 4 && !hasBloomFilter(left) &&
                 isDeterministic(right)) {
               j.copy(left = prefilter(left, lk, right, rk,
-                numBitsFor(numBitsConf, rs), numHashes))
-            } else if (canFilterRight(jt) && ls <= maxBuild &&
+                numBitsFor(rs)))
+            } else if (canFilterRight(jt) && ls <= MaxBuildBytes &&
                 rs >= minProbe && rs >= ls * 4 && !hasBloomFilter(right) &&
                 isDeterministic(left)) {
               j.copy(right = prefilter(right, rk, left, lk,
-                numBitsFor(numBitsConf, ls), numHashes))
+                numBitsFor(ls)))
             } else j
           case _ => j
         }
     }
   }
 
-  /** Filter size from the build side's byte stats when not pinned by
-    * conf: ~1 bit per build-side BYTE approximates 20-50 bits per key
+  /** Filter size from the build side's byte stats: ~1 bit per
+    * build-side BYTE approximates 20-50 bits per key
     * at typical row widths — comfortably past the ~10 bits/key a ~1%
     * false-positive rate needs (an oversized build never reaches this:
-    * maxBuildBytes rejects it first). Clamped to [2^17, 2^27] bits
+    * [[MaxBuildBytes]] rejects it first). Clamped to [2^17, 2^27] bits
     * (a 16 KB - 16 MB bit array) and rounded up to the required
     * multiple of 64. */
-  private def numBitsFor(confBits: Int, buildBytes: BigInt): Int = {
-    if (confBits > 0) return confBits
+  private def numBitsFor(buildBytes: BigInt): Int = {
     val target = buildBytes.max(BigInt(1L << 17)).min(BigInt(1L << 27)).toLong
     ((target + 63) / 64 * 64).toInt
   }
@@ -155,13 +148,13 @@ object InjectBloomJoinFilter extends Rule[LogicalPlan] with PredicateHelper {
   /** probe -> Filter(bloom_might_contain(<subquery>, xxhash64(key))). */
   private def prefilter(probe: LogicalPlan, probeKey: Expression,
       build: LogicalPlan, buildKey: Expression,
-      numBits: Int, numHashes: Int): LogicalPlan = {
-    val agg = BloomAgg(new XxHash64(Seq(buildKey)), numBits, numHashes)
+      numBits: Int): LogicalPlan = {
+    val agg = BloomAgg(new XxHash64(Seq(buildKey)), numBits, NumHashes)
       .toAggregateExpression()
     val bloomPlan = Aggregate(Nil, Seq(Alias(agg, "graft_bloom")()), build)
     Filter(
       BloomMightContain(ScalarSubquery(bloomPlan),
-        new XxHash64(Seq(probeKey)), numHashes),
+        new XxHash64(Seq(probeKey)), NumHashes),
       probe)
   }
 

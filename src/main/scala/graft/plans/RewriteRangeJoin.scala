@@ -27,22 +27,18 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * interval-length distribution ([[graft.operators.RangeJoin.widthFor]]
   * computes the median-length choice), and an optimizer rule must not
   * run jobs to find out. ANY positive width is semantically correct —
-  * width tunes cost only. Both join sides must clear
-  * `spark.graft.rangeJoin.minBytes` by stats (below that the nested
-  * loop is harmless and the rewrite just adds shuffles). Guards mirror
+  * width tunes cost only. Guards mirror
   * [[InjectBloomJoinFilter]]: deterministic inputs only, marker column
   * for fixpoint idempotence.
   */
 object RewriteRangeJoin extends Rule[LogicalPlan] with PredicateHelper {
   val WidthKey = "spark.graft.rangeJoin.bucketWidth"
-  val MinBytesKey = "spark.graft.rangeJoin.minBytes"
   private val MARKER = "__graft_rjb"
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val conf = SQLConf.get
     val width = conf.getConfString(WidthKey, "0").toLong
     if (width <= 0) return plan
-    val minBytes = conf.getConfString(MinBytesKey, "0").toLong
 
     def integral(e: Expression): Boolean =
       e.dataType == LongType || e.dataType == IntegerType
@@ -100,8 +96,7 @@ object RewriteRangeJoin extends Rule[LogicalPlan] with PredicateHelper {
         rewrite match {
           case Some((p, lo, hi, pOnLeft))
               if !hasEqui &&
-                p.deterministic && lo.deterministic && hi.deterministic &&
-                sizeOk(left, minBytes) && sizeOk(right, minBytes) =>
+                p.deterministic && lo.deterministic && hi.deterministic =>
             val (pointSide, ivSide) = if (pOnLeft) (left, right) else (right, left)
             val pAlias = Alias(bucket(p), s"${MARKER}_p")()
             val newPoints = Project(pointSide.output :+ pAlias, pointSide)
@@ -126,7 +121,4 @@ object RewriteRangeJoin extends Rule[LogicalPlan] with PredicateHelper {
         }
     }
   }
-
-  private def sizeOk(p: LogicalPlan, minBytes: Long): Boolean =
-    minBytes <= 0 || p.stats.sizeInBytes >= minBytes
 }

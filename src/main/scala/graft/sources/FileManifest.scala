@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
@@ -225,7 +225,7 @@ object FileManifest {
   def buildManifests(spark: SparkSession, dir: String,
       columns: Seq[String]): Map[String, Seq[FileStats]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
+    val fs = new Path(dir).getFileSystem(conf)
     val files = fs.listStatus(new Path(dir)).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toString)
@@ -655,9 +655,9 @@ object FileManifest {
     * story at 100 TB: a targeted delete touches the handful of files
     * that can contain matches (on a range-clustered layout, interior +
     * two boundary files), not the table. Rewritten files land under
-    * `rewriteDir` (one file per source file, concurrent single-task
-    * jobs — the compaction discipline); a rewrite left empty is
-    * dropped from the manifest entirely. Returns the post-delete
+    * `rewriteDir` (one file per source file, all in one job —
+    * [[rewriteStaged]]); a rewrite left empty is dropped from the
+    * manifest entirely. Returns the post-delete
     * manifest — [[readPruned]] over it IS the post-delete table; the
     * superseded originals stay on disk for the caller's retention
     * policy to sweep (the grace discipline readers need).
@@ -666,81 +666,154 @@ object FileManifest {
       column: String, lo: Long, hi: Long, rewriteDir: String): Seq[FileStats] = {
     val (affected, untouched) = manifest.partition(f => f.max >= lo && f.min <= hi)
     if (affected.isEmpty) return manifest
-    val stats = rewriteFlat(spark, affected.map(_.path), column,
-      rewriteDir, "del",
-      df => df.where(!col(column).between(lo, hi) || col(column).isNull),
-      shufflePerFk = false)
-      .filter(_.rows > 0)
+    val stats = rewriteFiles(spark, affected.map(_.path), column,
+        rewriteDir, "del", exchange = false)(
+      df => df.where(!col(column).between(lo, hi) || col(column).isNull))
     (untouched ++ stats).sortBy(_.path)
   }
 
-  /** The raw-API twin of GraftDml.distributedRewrite — ONE job over
-    * every affected file of a FLAT manifest: the files read as one
-    * scan tagged with a scheme-independent file key, `transform`
-    * rewrites uniformly (it must preserve `__fk`), and one
-    * dynamic-partitioned write lands each key's output under
-    * `_rw/__fk=<key>/`; the driver renames per-key files to flat
-    * `<prefix>_<i>-…` names in `rewriteDir` and footer-stats only
-    * them. At 10⁴–10⁵ touched files the retired mechanism — one
-    * single-task Spark job per file on a Future fan-out — made the
-    * driver's job-scheduling loop the wall clock; this is O(1) jobs
-    * and O(touched files) driver-side renames (spec-pinned flat in
-    * RawRewriteJobSpec). Shuffle-free unless `shufflePerFk`: tasks
-    * sort (key, cluster) locally and the dynamic writer splits by
-    * key, so per-file output content and footer stats match what the
-    * per-file jobs produced. */
-  /** Driver-side twin of the SQL-side `md5(substring_index(file, '/',
-    * -3))` key the one-job rewrites tag rows with: scheme-independent,
-    * 'k'-prefixed so a staged `__fk=<key>` directory never re-infers
-    * as a numeric partition column. */
-  private def flatKey(p: String): String = {
-    val tail = new Path(p).toUri.getPath
-      .split('/').takeRight(3).mkString("/")
+  // ---- the one staged-rewrite path ----------------------------------
+  //
+  // Every rewrite of graft table files — the raw CoW rewrites above
+  // and below, raw compaction, SQL DELETE/UPDATE/MERGE, OPTIMIZE —
+  // runs as ONE distributed job however many files it touches
+  // (per-file jobs on a Future fan-out made the driver's scheduling
+  // loop the wall clock at 10⁴–10⁵ files; RawRewriteJobSpec and
+  // GraftDmlSpec pin the flat job count): [[rewriteStaged]] writes
+  // every group of input files under one staging dir keyed by
+  // [[fileKey]] or bin id, and [[adoptStaged]] moves the output into
+  // place. Callers keep only their own scan and transform.
+
+  /** Scheme-independent file key shared by the SQL side
+    * (`input_file_name` URIs, [[fileKeyCol]]) and the driver side
+    * (manifest paths): md5 of the last `levels + 2` path segments —
+    * batchDir/partition-chain/file, unique within one table (flat
+    * tables, `levels` 1, hash dir/dir/file). Both sides hash the
+    * DECODED (true on-disk) segment chars, so spaces, ':' or '%' in a
+    * directory or Hive-escaped partition value cannot make the two
+    * domains disagree. The 'k' prefix keeps the key NON-NUMERIC so a
+    * staged `__fk=<key>` directory can never be re-inferred as a
+    * numeric partition column (an all-digit md5 would read back as
+    * DECIMAL and drop leading zeros — a silent key mismatch). */
+  private[graft] def fileKey(path: String, levels: Int = 1): String = {
+    val tail = new Path(path).toUri.getPath
+      .split('/').takeRight(levels + 2).mkString("/")
     "k" + java.security.MessageDigest.getInstance("MD5")
       .digest(tail.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
-  private def rewriteFlat(spark: SparkSession, affected: Seq[String],
-      sortCol: String, rewriteDir: String, prefix: String,
-      transform: DataFrame => DataFrame,
-      shufflePerFk: Boolean): Seq[FileStats] = {
-    val fkIdx: Map[String, Int] =
-      affected.zipWithIndex.map { case (p, i) => flatKey(p) -> i }.toMap
-    require(fkIdx.size == affected.size,
-      "rewriteFlat: file-key collision across affected files")
-    val src0 = spark.read.parquet(affected.sorted: _*)
-    require(!src0.columns.contains("__fk"),
-      "rewriteFlat: the table must not carry a `__fk` column (reserved)")
-    val dataCols = src0.columns.toSeq
-    val src = src0.withColumn("__fk", concat(lit("k"),
-      md5(substring_index(input_file_name(), "/", -3))))
-    val out0 = transform(src)
-    val out = if (shufflePerFk) out0.repartition(col("__fk")) else out0
-    val rwTmp = s"$rewriteDir/_rw"
-    out.select((dataCols.map(col) :+ col("__fk")): _*)
-      .sortWithinPartitions(col("__fk"), col(sortCol))
-      .write.mode(SaveMode.Overwrite).partitionBy("__fk").parquet(rwTmp)
-    val fs = new Path(rewriteDir).getFileSystem(
+  /** [[fileKey]] as a codegen'd expression over a file-name column.
+    * The tail is split on the ENCODED string ('/' is never
+    * percent-encoded in a URI path, and an escaped value's `%2F`
+    * arrives double-encoded as `%252F`, so segment boundaries are
+    * exact), then decoded into the on-disk domain [[fileKey]] hashes.
+    * `url_decode` is form-decoding ('+' -> space), so literal '+' is
+    * pre-escaped to `%2B` first. */
+  private[graft] def fileKeyCol(fileName: Column, levels: Int = 1): Column =
+    concat(lit("k"), md5(url_decode(regexp_replace(
+      substring_index(fileName, "/", -(levels + 2)), "\\+", "%2B"))))
+
+  /** The one staged per-key write. `src` is the caller's scan of the
+    * files in `groups`; each row is tagged with its file's
+    * [[fileKeyCol]] as `__fk` (every group one file), or — `binned` —
+    * with its group index as `__bin` through a broadcast
+    * file-key → bin map (manifest-sized). `transform` rewrites the
+    * tagged rows and must keep the key. `cols` plus the key are
+    * selected, field ids re-stamped from `ids` (transforms drop column
+    * metadata, and an id-mapped table's files without ids would refuse
+    * every read), an optional hash `exchange` on the key gathers each
+    * group into one task (for binning, or transforms whose joins
+    * scatter a file's rows), rows sort on (key, `clusterCol`), and
+    * one `partitionBy(key)` write lands every group under `staging`.
+    * Without the exchange the plan is shuffle-free: tasks sort
+    * locally and the dynamic writer splits by key, so each rewritten
+    * file's content and footer stats match a per-file job's.
+    * [[adoptStaged]] then moves group `i`'s output to `place(i)`. */
+  private[graft] def rewriteStaged(src: DataFrame, groups: Seq[Seq[String]],
+      binned: Boolean, levels: Int, cols: Seq[String], clusterCol: String,
+      ids: Option[org.apache.spark.sql.types.StructType], exchange: Boolean,
+      staging: String, destRoot: String, statCol: Option[String])(
+      transform: DataFrame => DataFrame)(
+      place: Int => (String, String)): Map[String, Seq[FileStats]] = {
+    require(!cols.contains("__fk") && !cols.contains("__bin"),
+      "a rewritten table must not carry a `__fk` or `__bin` column (reserved)")
+    val groupOfFk = groups.zipWithIndex.flatMap { case (files, i) =>
+      files.map(f => fileKey(f, levels) -> i)
+    }
+    require(groupOfFk.map(_._1).distinct.size == groupOfFk.size,
+      "staged rewrite: file-key collision across input files")
+    val tagged = src.withColumn("__fk", fileKeyCol(input_file_name(), levels))
+    val key = if (binned) "__bin" else "__fk"
+    val keyed = if (!binned) tagged else tagged.join(broadcast(src
+      .sparkSession.createDataFrame(groupOfFk).toDF("__fk", "__bin")), "__fk")
+    val out = transform(keyed).select((cols :+ key).map(col): _*)
+    val stamped = ids.fold(out)(stampFieldIds(out, _))
+    (if (exchange) stamped.repartition(col(key)) else stamped)
+      .sortWithinPartitions(col(key), col(clusterCol))
+      .write.mode(SaveMode.Overwrite).partitionBy(key).parquet(staging)
+    val groupOf: Map[String, Int] =
+      if (binned) groups.indices.map(i => s"__bin=$i" -> i).toMap
+      else groupOfFk.map { case (fk, i) => s"__fk=$fk" -> i }.toMap
+    adoptStaged(src.sparkSession, staging, destRoot, statCol)(leaf =>
+      place(groupOf.getOrElse(leaf,
+        sys.error(s"staged rewrite: unexpected key $leaf"))))
+  }
+
+  /** Adopt-by-move, the one routine every staged write lands through:
+    * each leaf `k=v…` dir under `staging` ([[listLeafPartitions]])
+    * moves file by file to `destRoot/<dest>/<prefix><file name>` for
+    * `(dest, prefix) = place(leaf)` ("" dest = `destRoot` itself) —
+    * data written once, adopted by rename (the Iceberg `add_files`
+    * contract). A move never clobbers: an existing destination means
+    * two writers staged the same name, never something to resolve
+    * silently. Paths are kept FS-qualified (file:/… on local), the
+    * form every manifest producer records and consumers (statFiles,
+    * version set-diffs) compare verbatim. Given `statCol`, each
+    * destination's moved files are footer-statted in one pass and
+    * returned keyed by dest; without it the map is empty. `staging`
+    * is deleted afterwards unless `keepStaging` (a staging root other
+    * writers share). */
+  private[graft] def adoptStaged(spark: SparkSession, staging: String,
+      destRoot: String, statCol: Option[String],
+      keepStaging: Boolean = false)(
+      place: String => (String, String)): Map[String, Seq[FileStats]] = {
+    val fs = new Path(destRoot).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val moved = fs.listStatus(new Path(rwTmp)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__fk="))
-      .sortBy(_.getPath.getName)
-      .flatMap { d =>
-        val fk = d.getPath.getName.stripPrefix("__fk=")
-        val i = fkIdx.getOrElse(fk,
-          sys.error(s"rewriteFlat: unexpected rewrite key $fk"))
-        fs.listStatus(d.getPath).toSeq
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .map { st =>
-            val dest = new Path(rewriteDir,
-              f"${prefix}_$i%05d-${st.getPath.getName}")
-            require(fs.rename(st.getPath, dest),
-              s"rewriteFlat: move failed: $dest")
-            fs.makeQualified(dest).toString
-          }
+    val moved = listLeafPartitions(fs, new Path(staging)).sortBy(_._1)
+      .flatMap { case (leaf, sts) =>
+        val (dest, prefix) = place(leaf)
+        val destDir =
+          if (dest.isEmpty) new Path(destRoot) else new Path(destRoot, dest)
+        fs.mkdirs(destDir)
+        sts.map { st =>
+          val to = new Path(destDir, prefix + st.getPath.getName)
+          require(!fs.exists(to), s"adopt: destination $to already exists")
+          require(fs.rename(st.getPath, to),
+            s"adopt: move failed for ${st.getPath}")
+          dest -> fs.makeQualified(to).toString
+        }
       }
-    fs.delete(new Path(rwTmp), true)
-    statsFor(spark, moved, Seq(sortCol)).map(_(sortCol)).sortBy(_.path)
+    if (!keepStaging) fs.delete(new Path(staging), true)
+    statCol.fold(Map.empty[String, Seq[FileStats]]) { c =>
+      moved.groupBy(_._1).map { case (dest, files) =>
+        dest -> statsFor(spark, files.map(_._2), Seq(c)).map(_(c))
+          .sortBy(_.path)
+      }
+    }
+  }
+
+  /** [[rewriteStaged]] for a FLAT raw-API table: each affected file
+    * rewrites one-to-one into `rewriteDir` as `<prefix>_<i>-…`, and
+    * only those files are footer-statted. */
+  private def rewriteFiles(spark: SparkSession, affected: Seq[String],
+      sortCol: String, rewriteDir: String, prefix: String,
+      exchange: Boolean)(transform: DataFrame => DataFrame)
+      : Seq[FileStats] = {
+    val src = spark.read.parquet(affected.sorted: _*)
+    rewriteStaged(src, affected.map(Seq(_)), binned = false, levels = 1,
+      src.columns.toSeq, sortCol, ids = None, exchange,
+      s"$rewriteDir/_rw", rewriteDir, Some(sortCol))(transform)(
+      i => ("", f"${prefix}_$i%05d-")).getOrElse("", Nil)
   }
 
   /** COPY-ON-WRITE UPDATE: `SET setCol = value WHERE column BETWEEN lo
@@ -760,11 +833,10 @@ object FileManifest {
         "(rewritten rows could leave their file's key range)")
     val (affected, untouched) = manifest.partition(f => f.max >= lo && f.min <= hi)
     if (affected.isEmpty) return manifest
-    val stats = rewriteFlat(spark, affected.map(_.path), column,
-      rewriteDir, "upd",
+    val stats = rewriteFiles(spark, affected.map(_.path), column,
+        rewriteDir, "upd", exchange = false)(
       df => df.withColumn(setCol,
-        when(col(column).between(lo, hi), value).otherwise(col(setCol))),
-      shufflePerFk = false)
+        when(col(column).between(lo, hi), value).otherwise(col(setCol))))
     (untouched ++ stats).sortBy(_.path)
   }
 
@@ -865,10 +937,9 @@ object FileManifest {
     val (affected, untouched) = table.data.partition(f =>
       hasKeyIn(f.min, f.max))
     if (affected.isEmpty) return MorTable(table.column, table.data, Nil)
-    // ONE distributed job over every affected file (the rewriteFlat
-    // discipline every other raw rewrite rides — the per-file Future
-    // fan-out retired r13/r14); small key sets anti-filter as a
-    // codegen'd `isin` literal, large ones as a broadcast anti-join
+    // ONE distributed job over every affected file (the staged
+    // rewrite); small key sets anti-filter as a codegen'd `isin`
+    // literal, large ones as a broadcast anti-join
     // (nulls survive either way: a null key matches no equality)
     val anti: DataFrame => DataFrame =
       if (keys.length <= MorIsinThreshold)
@@ -884,9 +955,8 @@ object FileManifest {
         df => df.join(broadcast(keyDf),
           df(table.column) === keyDf("__g_delkey"), "left_anti")
       }
-    val stats = rewriteFlat(spark, affected.map(_.path), table.column,
-      rewriteDir, "mor", anti, shufflePerFk = false)
-      .filter(_.rows > 0)
+    val stats = rewriteFiles(spark, affected.map(_.path), table.column,
+      rewriteDir, "mor", exchange = false)(anti)
     MorTable(table.column, (untouched ++ stats).sortBy(_.path), Nil)
   }
 
@@ -1119,24 +1189,22 @@ object FileManifest {
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("_file_idx="))
       .map(_.getPath.getName.stripPrefix("_file_idx=").toInt).sorted
     val affected = slices.filter(_ >= 0)
-    // ONE distributed job over every touched file (the rewriteFlat
-    // shape — the retired mechanism ran one single-task full-outer
-    // join job PER touched file on a Future fan-out): every touched
-    // file's rows meet exactly their own staged slice through a
-    // (file idx, key) equi-join; shufflePerFk keeps each rewritten
-    // file one output (the join scatters a file's rows).
+    // ONE distributed job over every touched file (the staged
+    // rewrite): every touched file's rows meet exactly their own
+    // staged slice through a (file idx, key) equi-join; the exchange
+    // keeps each rewritten file one output (the join scatters a
+    // file's rows).
     val rewrittenStats: Seq[FileStats] =
       if (affected.isEmpty) Nil
       else {
         val mapDf = spark.createDataFrame(
-          affected.map(i => (flatKey(manifest(i).path), i)))
+          affected.map(i => (fileKey(manifest(i).path), i)))
           .toDF("__mfk", "__idx")
         val outFk = spark.createDataFrame(
-          affected.map(i => (i, flatKey(manifest(i).path))))
+          affected.map(i => (i, fileKey(manifest(i).path))))
           .toDF("__ridx", "__ofk")
-        rewriteFlat(spark, affected.map(i => manifest(i).path), column,
-          rewriteDir, "mrg",
-          df => {
+        rewriteFiles(spark, affected.map(i => manifest(i).path), column,
+            rewriteDir, "mrg", exchange = true) { df =>
             val t = df.join(broadcast(mapDf),
               col("__fk") === col("__mfk")).drop("__mfk", "__fk")
             val c = spark.read.parquet(stage)
@@ -1152,8 +1220,7 @@ object FileManifest {
                 when(col(s"c.$column").isNotNull, col(s"c.$cn"))
                   .otherwise(col(s"t.$cn")).as(cn)
               }.toSeq :+ col("__ofk").as("__fk")): _*)
-          },
-          shufflePerFk = true)
+        }
       }
     // keys outside every file's range: new clustered file(s); a new
     // file spanning a gap may overlap neighbors' ranges — pruning
@@ -1209,53 +1276,22 @@ object FileManifest {
     bins.toSeq
   }
 
-  /** Small-file compaction: rewrite each planned bin as ONE file,
-    * re-sorted on the cluster column, in ONE distributed job (the
-    * OPTIMIZE shape — the retired mechanism submitted one single-task
-    * job per bin on a Future fan-out, whose driver scheduling loop
-    * became the wall clock at 10^4 bins): all inputs read as one scan,
-    * each row routed to its bin via a broadcast (fileKey → bin) map —
-    * manifest-sized — then one hash exchange on the bin id merges each
-    * bin into exactly one key-sorted file under `bin_<i>/`. */
+  /** Small-file compaction: rewrite each planned bin as ONE file
+    * under `bin_<i>/`, re-sorted on the cluster column, in ONE
+    * distributed job (the OPTIMIZE shape: [[rewriteStaged]] binned,
+    * with a hash exchange on the bin id). */
   def compact(spark: SparkSession, manifest: Seq[FileStats], outDir: String,
       sortCol: String, targetRows: Long): Unit = {
     // clear the destination first: per-bin overwrite would leave stale
     // bins behind whenever the new plan has fewer of them
     val out = new Path(outDir)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(out, true)
-    val bins = planCompaction(manifest, targetRows)
+    out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+    val bins = planCompaction(manifest, targetRows).map(_.map(_.path))
     if (bins.isEmpty) return
-    val binOfFk = bins.zipWithIndex.flatMap { case (bin, i) =>
-      bin.map(f => (flatKey(f.path), i))
-    }
-    require(binOfFk.map(_._1).distinct.size == binOfFk.size,
-      "compact: file-key collision across bin inputs")
-    val mapDf = spark.createDataFrame(binOfFk).toDF("__fk", "__bin")
-    val cmpTmp = s"$outDir/_cmp"
-    spark.read.parquet(manifest.map(_.path).sorted: _*)
-      .withColumn("__fk", concat(lit("k"),
-        md5(substring_index(input_file_name(), "/", -3))))
-      .join(broadcast(mapDf), "__fk")
-      .drop("__fk")
-      .repartition(col("__bin"))
-      .sortWithinPartitions(col("__bin"), col(sortCol))
-      .write.mode(SaveMode.Overwrite).partitionBy("__bin").parquet(cmpTmp)
-    fs.listStatus(new Path(cmpTmp)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__bin="))
-      .foreach { d =>
-        val i = d.getPath.getName.stripPrefix("__bin=").toInt
-        val destDir = new Path(outDir, f"bin_$i%05d")
-        fs.mkdirs(destDir)
-        fs.listStatus(d.getPath).toSeq
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .foreach { st =>
-            val dest = new Path(destDir, st.getPath.getName)
-            require(fs.rename(st.getPath, dest),
-              s"compact: move failed: $dest")
-          }
-      }
-    fs.delete(new Path(cmpTmp), true)
+    val src = spark.read.parquet(bins.flatten.sorted: _*)
+    rewriteStaged(src, bins, binned = true, levels = 1, src.columns.toSeq,
+      sortCol, ids = None, exchange = true, s"$outDir/_cmp", outDir,
+      statCol = None)(identity)(i => (f"bin_$i%05d", ""))
   }
 
   /** Read a compacted table back (bins are subdirectories). */
@@ -1308,17 +1344,20 @@ object FileManifest {
 
   /** Leaf partition directories of a Hive-nested layout, as
     * (relative `c1=a/c2=b` key, parquet file statuses) — the shared
-    * walk behind [[buildPartitioned]], [[adoptBatchAdded]], and every
-    * rewrite that adopts a `partitionBy(cols)` output tree. Committer
-    * internals (`_temporary`, `_SUCCESS`) skip at every level. */
+    * walk behind [[buildPartitioned]] and [[adoptStaged]]. Committer
+    * internals (`_temporary`, `_SUCCESS`) skip at every level; a
+    * `_`-prefixed `k=v` dir (a staged `__fk=`/`__bin=` key) is a
+    * partition, Spark's own listing rule. */
   private[graft] def listLeafPartitions(
       fs: org.apache.hadoop.fs.FileSystem, root: Path)
       : Seq[(String, Seq[org.apache.hadoop.fs.FileStatus])] = {
     def walk(dir: Path, rel: String)
         : Seq[(String, Seq[org.apache.hadoop.fs.FileStatus])] = {
       val entries = fs.listStatus(dir).toSeq
-      val subDirs = entries.filter(e =>
-        e.isDirectory && !e.getPath.getName.startsWith("_"))
+      val subDirs = entries.filter(e => e.isDirectory && {
+        val n = e.getPath.getName
+        !n.startsWith("_") || n.contains("=")
+      })
       val files = entries.filter(e =>
         e.isFile && e.getPath.getName.endsWith(".parquet"))
       val here = if (files.nonEmpty && rel.nonEmpty) Seq(rel -> files) else Nil
@@ -1335,7 +1374,7 @@ object FileManifest {
   def buildPartitioned(spark: SparkSession, root: String,
       column: String): PartitionedManifest = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = FileSystem.get(new java.net.URI(root), conf)
+    val fs = new Path(root).getFileSystem(conf)
     // Hive-nested walk: one directory level per partition column, so a
     // multi-column layout catalogs with `c1=a/c2=b` keys and a
     // single-column one keeps its flat `c1=a` keys — same structure
@@ -1424,34 +1463,12 @@ object FileManifest {
   /** Move a staged batch's partition dirs under `tableRoot` and
     * footer-stat JUST the moved files — the side-effecting half of
     * [[adoptBatch]], separated so a commit retry can re-fold the
-    * already-moved stats without touching storage again. */
+    * already-moved stats without touching storage again. Committer
+    * internals (`_temporary` of an in-flight job) stay in `batchRoot`. */
   def adoptBatchAdded(spark: SparkSession, tableRoot: String,
-      batchRoot: String, column: String): Map[String, Seq[FileStats]] = {
-    val fs = new Path(tableRoot).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // committer internals (`_temporary` of an in-flight job) are never
-    // partition dirs — only col=value directory chains are adoptable;
-    // the recursive walk handles multi-level (c1=a/c2=b) layouts
-    listLeafPartitions(fs, new Path(batchRoot)).flatMap {
-      case (part, sts) =>
-        val destDir = new Path(tableRoot, part)
-        fs.mkdirs(destDir)
-        val moved = sts.map { st =>
-          val dest = new Path(destDir, st.getPath.getName)
-          require(!fs.exists(dest),
-            s"adoptBatch: destination $dest already exists")
-          require(fs.rename(st.getPath, dest),
-            s"adoptBatch: rename failed for ${st.getPath}")
-          // store the FS-qualified form (file:/… on local): every other
-          // manifest producer records listStatus-derived strings, and
-          // consumers (statFiles, version set-diffs) compare verbatim
-          fs.makeQualified(dest).toString
-        }
-        if (moved.isEmpty) None
-        else Some(part -> statsFor(spark, moved, Seq(column))
-          .map(_(column)).sortBy(_.path))
-    }.toMap
-  }
+      batchRoot: String, column: String): Map[String, Seq[FileStats]] =
+    adoptStaged(spark, batchRoot, tableRoot, Some(column),
+      keepStaging = true)(part => (part, ""))
 
   /** Retention/compaction expiry: drop file entries from one partition;
     * a partition with no files left leaves the catalog entirely. */

@@ -5,9 +5,13 @@ import java.nio.file.{Files, Paths}
 import graft.{GraftSession, SparkEntry}
 
 /** Dumps the FORMATTED physical plan of the headline queries to a
-  * markdown file (default PLANS.md) so plan shape — pushed filters,
-  * broadcast vs shuffle joins, partial aggregation, codegen spans —
-  * can be reviewed without running Spark.
+  * markdown file so plan shape — pushed filters, broadcast vs shuffle
+  * joins, partial aggregation, codegen spans — can be reviewed without
+  * running Spark:
+  * `runMain graft.tools.Explain [out.md] [sfDir] [q1,q2,...]`
+  * (defaults: PLANS.md, the sf0.01 test data, the headline list).
+  * Each query is materialized first so AQE's FINAL plan (coalesced
+  * exchanges, runtime join strategy) is what lands.
   */
 object Explain {
   val headline: Seq[String] = Seq(
@@ -99,12 +103,17 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("PLANS.md")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
+    val names = if (args.length > 2)
+        args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      else headline
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val spark = GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by graft.tools.Explain, ")
       .append(s"data: $dir)\n\n")
-    headline.foreach { name =>
+    names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       df.count() // materialize so AQE reports the final plan
       val plan = df.queryExecution.explainString(
@@ -115,7 +124,7 @@ object Explain {
       notes.get(name).foreach(n => sb.append(n).append("\n\n"))
     }
     Files.write(Paths.get(out), sb.toString.getBytes("UTF-8"))
-    println(s"wrote $out (${headline.size} plans)")
+    println(s"wrote $out (${names.size} plans)")
     spark.stop()
   }
 }

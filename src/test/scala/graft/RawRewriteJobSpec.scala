@@ -16,12 +16,17 @@ class RawRewriteJobSpec extends AnyFunSuite {
 
   private val N = 4000L
 
-  private def mkLayout(files: Int): (String, Seq[FileManifest.FileStats]) = {
+  /** `dirPrefix` "raw rw" puts a space in every path: input_file_name()
+    * percent-encodes it, manifest paths do not, and both sides of a
+    * rewrite's file key must still hash the same bytes. */
+  private def mkLayout(files: Int, dirPrefix: String = "rawrw")
+      : (String, Seq[FileManifest.FileStats]) = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("rawrw").toString
+    val tmp = java.nio.file.Files.createTempDirectory(dirPrefix).toString
     val df = (0L until N).map(i => (i, i * 2, s"u$i")).toDF("k", "v", "s")
     FileManifest.writeLayout(df, s"$tmp/t", "k", files)
-    (tmp, FileManifest.buildManifest(spark, s"$tmp/t", "k"))
+    (tmp, FileManifest.append(Nil, spark,
+      FileManifest.listParquet(spark, s"$tmp/t"), "k"))
   }
 
   private def jobsDuring(body: => Unit): Int = {
@@ -46,6 +51,8 @@ class RawRewriteJobSpec extends AnyFunSuite {
       r2 = FileManifest.deleteRange(spark, m2, "k", 100L, 3900L, s"$t2/rw") }
     val j16 = jobsDuring {
       r16 = FileManifest.deleteRange(spark, m16, "k", 100L, 3900L, s"$t16/rw") }
+    val (ts, ms) = mkLayout(16, "raw rw")
+    val rs = FileManifest.deleteRange(spark, ms, "k", 100L, 3900L, s"$ts/rw")
     assert(m16.count(f => f.max >= 100L && f.min <= 3900L) >= 12,
       "test premise: the wide delete must touch many files")
     assert(j16 <= j2 + 2,
@@ -54,6 +61,7 @@ class RawRewriteJobSpec extends AnyFunSuite {
     val a = FileManifest.readAll(spark, r2).orderBy("k").collect().toSeq
     val b = FileManifest.readAll(spark, r16).orderBy("k").collect().toSeq
     assert(a == b)
+    assert(FileManifest.readAll(spark, rs).orderBy("k").collect().toSeq == b)
     assert(a.size == (N - (3900 - 100 + 1)).toInt)
   }
 
@@ -66,11 +74,15 @@ class RawRewriteJobSpec extends AnyFunSuite {
       500L, 3500L, "v", col("v") + 1000000L, s"$t2/rw") }
     val j16 = jobsDuring { r16 = FileManifest.updateRange(spark, m16, "k",
       500L, 3500L, "v", col("v") + 1000000L, s"$t16/rw") }
+    val (ts, ms) = mkLayout(16, "raw rw")
+    val rs = FileManifest.updateRange(spark, ms, "k",
+      500L, 3500L, "v", col("v") + 1000000L, s"$ts/rw")
     assert(j16 <= j2 + 2,
       s"updateRange must be O(1) jobs: 2-file ran $j2, 16-file ran $j16")
     val a = FileManifest.readAll(spark, r2).orderBy("k").collect().toSeq
     val b = FileManifest.readAll(spark, r16).orderBy("k").collect().toSeq
     assert(a == b)
+    assert(FileManifest.readAll(spark, rs).orderBy("k").collect().toSeq == b)
     val updated = FileManifest.readAll(spark, r16)
       .where(col("k").between(500L, 3500L) && col("v") >= 1000000L).count()
     assert(updated == 3001L)
@@ -91,11 +103,14 @@ class RawRewriteJobSpec extends AnyFunSuite {
       changes, s"$t2/rw", "_del") }
     val j16 = jobsDuring { r16 = FileManifest.mergeKeyed(spark, m16, "k",
       changes, s"$t16/rw", "_del") }
+    val (ts, ms) = mkLayout(16, "raw rw")
+    val rs = FileManifest.mergeKeyed(spark, ms, "k", changes, s"$ts/rw", "_del")
     assert(j16 <= j2 + 2,
       s"mergeKeyed must be O(1) jobs: 2-file ran $j2, 16-file ran $j16")
     val a = FileManifest.readAll(spark, r2).orderBy("k").collect().toSeq
     val b = FileManifest.readAll(spark, r16).orderBy("k").collect().toSeq
     assert(a == b)
+    assert(FileManifest.readAll(spark, rs).orderBy("k").collect().toSeq == b)
     val t = FileManifest.readAll(spark, r16)
     assert(t.count() == N - 10 + 2) // 10 deletes, 2 inserts
     assert(t.where(col("k") === 105L).head.getLong(1) == -105L)
@@ -115,6 +130,8 @@ class RawRewriteJobSpec extends AnyFunSuite {
         (100L until 3900L by 2).toDF("k"), s"$tmp/del")
     val mor2 = morOf(t2, m2)
     val mor16 = morOf(t16, m16)
+    val (ts, ms) = mkLayout(16, "raw rw")
+    val rs = FileManifest.applyDeletesMoR(spark, morOf(ts, ms), s"$ts/rw")
     var r2: FileManifest.MorTable = null
     var r16: FileManifest.MorTable = null
     val j2 = jobsDuring {
@@ -127,6 +144,8 @@ class RawRewriteJobSpec extends AnyFunSuite {
     val a = FileManifest.readAll(spark, r2.data).orderBy("k").collect().toSeq
     val b = FileManifest.readAll(spark, r16.data).orderBy("k").collect().toSeq
     assert(a == b)
+    assert(FileManifest.readAll(spark, rs.data).orderBy("k").collect().toSeq
+      == b)
     assert(a.size == (N - 1900).toInt)
     assert(r16.deleteFiles.isEmpty, "compaction must fold the sidecars in")
   }
@@ -138,6 +157,8 @@ class RawRewriteJobSpec extends AnyFunSuite {
       FileManifest.compact(spark, m2, s"$t2/out", "k", 1000L) }
     val j16 = jobsDuring {
       FileManifest.compact(spark, m16, s"$t16/out", "k", 1000L) }
+    val (ts, ms) = mkLayout(32, "raw rw")
+    FileManifest.compact(spark, ms, s"$ts/out", "k", 1000L)
     assert(j16 <= j2 + 2,
       s"compact must be O(1) jobs: 4-file ran $j2, 32-file ran $j16")
     val a = FileManifest.readCompacted(spark, s"$t2/out")
@@ -145,5 +166,8 @@ class RawRewriteJobSpec extends AnyFunSuite {
     val b = FileManifest.readCompacted(spark, s"$t16/out")
       .orderBy("k").collect().toSeq
     assert(a == b && a.size == N.toInt)
+    assert(FileManifest.readCompacted(spark, s"$ts/out")
+      .orderBy("k").collect().toSeq == b, "a silently dropped bin loses rows")
+    assert(FileManifest.buildManifest(spark, s"$ts/t", "k") == ms)
   }
 }
