@@ -11,7 +11,9 @@ import org.apache.spark.sql.graftshim.SparkShims
   * and runs each query once (parquet footer reads, codegen, JIT); the
   * timed portion then makes THREE round-robin passes over the whole
   * query list and reports each query's MEDIAN — steady-state
-  * throughput, which is what a long-running cluster job sees.
+  * throughput, which is what a long-running cluster job sees. A query
+  * that throws fails the run: the line names it under `failed` and the
+  * process exits 1.
   *
   * CONTENTION ROBUSTNESS is designed in, because a shared host can
   * inflate a run without any code regression:
@@ -73,10 +75,14 @@ object Bench {
       }
     })
 
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     def run(name: String): Double = {
       val t0 = System.nanoTime()
       try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => return -1.0 }
+      catch { case e: Throwable =>
+        if (failed.add(name)) Console.err.println(s"[bench] $name failed: $e")
+        return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
     /** (seconds, shuffle write, shuffle read, disk spill) of one run. */
@@ -169,6 +175,11 @@ object Bench {
       results.map(t => "\"" + t._1 + "\":" + f(t)).mkString("{", ",", "}")
     def sec(s: Double): String = if (s < 0) "-1" else f"$s%.3f"
     val total = results.map(_._2).filter(_ >= 0).sum
+    // the fields every contract-line rendering opens with
+    val head = s"""{"metric":"total","value":${sec(total)},"unit":"sec"""" +
+      f""","canary":$canaryRatio%.2f,"canary_min":$cmin%.3f""" +
+      s""","noisy":$noisy,"failed":""" +
+      failed.map("\"" + _ + "\"").mkString("[", ",", "]")
 
     // Shuffle write/read + spill detail is several KB of JSON — too big
     // for the driver's bounded stdout-tail capture, so it goes to a side
@@ -177,12 +188,10 @@ object Bench {
     val samplesJson = names.map(n =>
         "\"" + n + "\":" + samples(n).map(sec).mkString("[", ",", "]"))
       .mkString("{", ",", "}")
-    val detail = s"""{"metric":"total","value":${sec(total)},"unit":"sec"""" +
+    val detail = head +
       s""","queries":${obj(t => sec(t._2))}""" +
       s""","samples":$samplesJson""" +
-      s""","canary_sec":$canaryJson""" +
-      f""","canary":$canaryRatio%.2f,"canary_min":$cmin%.3f""" +
-      s""","clean_passes":$cleanPasses,"noisy":$noisy""" +
+      s""","canary_sec":$canaryJson,"clean_passes":$cleanPasses""" +
       s""","shuffle_write_bytes":${obj(_._3.toString)}""" +
       s""","shuffle_read_bytes":${obj(_._4.toString)}""" +
       s""","disk_spill_bytes":${obj(_._5.toString)}""" +
@@ -215,10 +224,7 @@ object Bench {
       val qs = results.map(t =>
           "\"" + key(t._1) + "\":" + (if (t._2 < 0) "-1" else f(t._2)))
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec"""" +
-        f""","canary":$canaryRatio%.2f,"canary_min":$cmin%.3f""" +
-        s""","noisy":$noisy""" +
-        s""","queries":$qs,"sf":"$sf"}"""
+      head + s""","queries":$qs,"sf":"$sf"}"""
     }
     // trailing-zero stripping buys ~2 chars/query before precision drops
     def strip(s: String): String =
@@ -240,9 +246,7 @@ object Bench {
             (if (t._2 < 0) "-1" else strip(f"${t._2}%.1f")))
         .mkString("{", ",", "}")
       val fastTotal = rest.map(_._2).filter(_ >= 0).sum
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec"""" +
-        f""","canary":$canaryRatio%.2f,"canary_min":$cmin%.3f""" +
-        s""","noisy":$noisy,"queries":$qs""" +
+      head + s""","queries":$qs""" +
         s""","fast_n":${rest.size},"fast_total":${strip(f"$fastTotal%.1f")}""" +
         s""","sf":"$shortSf"}"""
     }
@@ -251,11 +255,9 @@ object Bench {
         .map(line(_, sfDir, identity)) ++
         Seq(line(s1, shortSf, identity), line(s1, shortSf, shortName)) ++
         Seq(150, 120, 90, 60, 30).map(lineTop))
-      .find(_.length <= 1950).getOrElse(
-        s"""{"metric":"total","value":${sec(total)},"unit":"sec"""" +
-          f""","canary":$canaryRatio%.2f,"canary_min":$cmin%.3f""" +
-          s""","noisy":$noisy,"sf":"$sfDir"}""")
+      .find(_.length <= 1950).getOrElse(head + s""","sf":"$sfDir"}""")
     println(out)
     Console.err.println(s"[bench] contract line length = ${out.length} chars")
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

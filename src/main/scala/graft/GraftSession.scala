@@ -14,8 +14,29 @@ import org.apache.spark.sql.SparkSession
   * user, not by conf, so a `file:` FileSystem created in the JVM before
   * the first graft session keeps Hadoop's class; FileContext, which
   * streaming checkpoints and state stores write through, is not cached.
+  *
+  * Spark's parallel file listing (a file stream source's `getBatch`,
+  * and any read of more than 32 paths) runs one task per core, not one
+  * per file. A listing task lists its file in under a millisecond, but
+  * first deserializes the session's Hadoop conf (~114 KB, 14–42 ms),
+  * so a 100-file trigger paid that 100 times. Raising Spark's 32-path
+  * threshold instead would list serially on the driver, one round trip
+  * per file on an object store; the cap keeps the listing distributed.
   */
 object GraftSession {
+  private val LocalMaster = """local(?:\[(\d+|\*)(?:\s*,\s*\d+)?\])?""".r
+
+  /** Cores the session's tasks run on: `local[N]` (also `local[N,F]`)
+    * gives N, `local[*]` the host's processors, bare `local` 1. A
+    * cluster master gives `shufflePartitions`, which a deployer sizes
+    * to the cluster's cores (above). */
+  private def cores(master: String, shufflePartitions: Int): Int = master match {
+    case LocalMaster(null) => 1
+    case LocalMaster("*") => Runtime.getRuntime.availableProcessors
+    case LocalMaster(n) => n.toInt
+    case _ => shufflePartitions
+  }
+
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -27,6 +48,9 @@ object GraftSession {
       // other AQE knobs keep Spark's defaults; a deployer sets them directly
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // one listing task per core, not per file (see the object doc)
+      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+        cores(master, shufflePartitions).toString)
       // graft tables are FIELD-ID mapped (Iceberg-style column
       // identity: RENAME resolves old files by id, a re-added dropped
       // name can never match retired bytes). Matching engages only

@@ -768,6 +768,9 @@ object Dedup {
               col("__nm").substr(i + 1,
                 length(col("__nm")) - i))))
           .otherwise(array().cast("array<string>")))).as("__key"))
+      // a NULL name is its own only key, and hash(NULL) is the seed:
+      // kept, every NULL-name row would pair with every other one
+      .where(col("__key").isNotNull)
       .select(col("__id"), hash(col("__key")).as("__kh"))
     // dedupe the UNORDERED id pair (lo < hi) so each candidate enters
     // the distinct once, then orient the emitted pair by NAME order

@@ -25,6 +25,8 @@ private[graft] object DriverParquet {
 
   def schema(s: String): MessageType = MessageTypeParser.parseMessageType(s)
 
+  private val TmpName = ".part-00000.parquet.tmp"
+
   /** Overwrite `dir` with a single parquet file holding `rows`.
     * Crash-safe ordering: the new file is fully written under a
     * tmp name readers ignore (dot-prefixed, non-`.parquet`), the old
@@ -39,7 +41,7 @@ private[graft] object DriverParquet {
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
     fs.mkdirs(d)
-    val tmp = new Path(d, ".part-00000.parquet.tmp")
+    val tmp = new Path(d, TmpName)
     fs.delete(tmp, false) // crashed-attempt debris
     val w = ExampleParquetWriter
       .builder(HadoopOutputFile.fromPath(tmp, conf))
@@ -55,15 +57,20 @@ private[graft] object DriverParquet {
   }
 
   /** Every row of every parquet file directly under `dir` (sidecars
-    * are bounded by contract — this is a driver-side value). */
+    * are bounded by contract — this is a driver-side value). A dir
+    * holding only an [[overwrite]]'s tmp file (a crash between its
+    * delete and its rename) fails loudly rather than reading as empty. */
   def read(spark: SparkSession, dir: String): Seq[Group] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
+    val listed = fs.listStatus(d).toSeq.filter(_.isFile).map(_.getPath)
+    val files = listed.filter(_.getName.endsWith(".parquet"))
+    if (files.isEmpty && listed.exists(_.getName == TmpName))
+      throw new IllegalStateException(s"DriverParquet: $dir holds only " +
+        s"$TmpName, an overwrite that crashed before its rename")
     val out = Seq.newBuilder[Group]
-    fs.listStatus(d).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).sortBy(_.getName)
+    files.sortBy(_.getName)
       .foreach { f =>
         val r = org.apache.parquet.hadoop.ParquetReader
           .builder(new GroupReadSupport(), f).withConf(conf).build()

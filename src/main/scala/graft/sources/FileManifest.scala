@@ -233,23 +233,32 @@ object FileManifest {
     columns.map(c => c -> perFile.map(_(c)).sortBy(_.path)).toMap
   }
 
-  /** Footer stats for `paths`, distributed when the file count makes a
-    * job worthwhile. A handful of files stays on the driver (job setup
-    * costs more than the reads); beyond that, executors each read a
-    * slice of footers and ship back only the O(files) stat rows. */
+  /** Footer stats for each of `paths`, in order. */
   private def statsFor(spark: SparkSession, paths: Seq[String],
-      columns: Seq[String]): Seq[Map[String, FileStats]] =
-    if (paths.isEmpty) Nil
-    else if (paths.size <= 8) {
+      columns: Seq[String]): Seq[Map[String, FileStats]] = {
+    val cols = columns.toList
+    footerPass(spark, paths)(footerStats(_, _, cols))
+  }
+
+  /** `read` over each footer in `paths`, in order, distributed
+    * when the file count makes a job worthwhile. A handful of files
+    * stays on the driver (job setup costs more than the reads); beyond
+    * that, executors each read a slice of footers and ship back only
+    * the O(files) results. One task per core, not per footer: each
+    * task deserializes the Hadoop conf it carries, which costs more
+    * than reading a footer. */
+  private def footerPass[T: scala.reflect.ClassTag](spark: SparkSession,
+      paths: Seq[String])(read: (Configuration, Path) => T): Seq[T] =
+    if (paths.size <= 8) {
       val conf = spark.sparkContext.hadoopConfiguration
-      paths.map(p => footerStats(conf, new Path(p), columns))
+      paths.map(p => read(conf, new Path(p)))
     } else {
       val sconf = org.apache.spark.sql.graftshim.SparkShims
         .serializableConf(spark.sparkContext.hadoopConfiguration)
-      val cols = columns.toList
       spark.sparkContext
-        .parallelize(paths, math.min(paths.size, 64))
-        .map(p => footerStats(sconf.value, new Path(p), cols))
+        .parallelize(paths,
+          math.min(paths.size, spark.sparkContext.defaultParallelism))
+        .map(p => read(sconf.value, new Path(p)))
         .collect().toSeq
     }
 
@@ -373,21 +382,8 @@ object FileManifest {
   def buildStringManifest(spark: SparkSession, dir: String,
       column: String, truncateTo: Int = 16): Seq[StrFileStats] = {
     require(truncateTo >= 1, s"bad truncateTo $truncateTo")
-    val paths = listParquet(spark, dir)
-    val stats =
-      if (paths.size <= 8) {
-        val conf = spark.sparkContext.hadoopConfiguration
-        paths.map(p => strFooterStats(conf, new Path(p), column, truncateTo))
-      } else {
-        val sconf = org.apache.spark.sql.graftshim.SparkShims
-          .serializableConf(spark.sparkContext.hadoopConfiguration)
-        val colName = column; val trunc = truncateTo
-        spark.sparkContext.parallelize(paths, math.min(paths.size, 64))
-          .map(p => FileManifest.strFooterStats(sconf.value, new Path(p),
-            colName, trunc))
-          .collect().toSeq
-      }
-    stats.sortBy(_.path)
+    footerPass(spark, listParquet(spark, dir))(
+      strFooterStats(_, _, column, truncateTo)).sortBy(_.path)
   }
 
   /** String-range file pruning over the truncated bounds —

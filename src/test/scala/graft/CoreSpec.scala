@@ -241,6 +241,23 @@ class CoreSpec extends AnyFunSuite {
     assert(math.abs(sims(1)) < 1e-12)
   }
 
+  test("sidecar read after a crash between overwrite's delete and rename fails loudly") {
+    import java.nio.file.{Files, Paths}
+    import graft.sources.DriverParquet
+    val dir = Files.createTempDirectory("graft_sidecar").toString
+    val mt = DriverParquet.schema("message s { required int64 n; }")
+    DriverParquet.overwrite(spark, dir, mt)(f => Seq(f.newGroup().append("n", 7L)))
+    assert(DriverParquet.read(spark, dir).map(_.getLong("n", 0)) == Seq(7L))
+    // the crash: overwrite has written its tmp file and deleted the old
+    // file, but not renamed the tmp into place
+    Files.move(Paths.get(dir, "part-00000.parquet"), Paths.get(dir, ".part-00000.parquet.tmp"))
+    val e = intercept[IllegalStateException](DriverParquet.read(spark, dir))
+    assert(e.getMessage.contains(dir), e.getMessage)
+    // the next overwrite clears the debris and reads back
+    DriverParquet.overwrite(spark, dir, mt)(f => Seq(f.newGroup().append("n", 8L)))
+    assert(DriverParquet.read(spark, dir).map(_.getLong("n", 0)) == Seq(8L))
+  }
+
   test("NIO local file system: Hadoop's modes, renames and link status") {
     import java.io.FileNotFoundException
     import java.nio.file.{Files, Paths}

@@ -2482,6 +2482,29 @@ class OperatorsSpec extends AnyFunSuite {
     assert(msgs(badId).exists(m => m.contains("non-numeric") ||
         m.contains("CAST_INVALID_INPUT")),
       s"non-numeric id must raise, got: ${msgs(badId)}")
+    // NULL names are never candidates: 2,000 of them add no join rows
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val named = Seq(1L -> "smith", 2L -> "smyth", 3L -> "jones", 4L -> "jone")
+    val nulls = (100L until 2100L).map(_ -> (null: String))
+    /** The emitted pairs and the rows out of the candidate join. */
+    def run(rows: Seq[(Long, String)]): (Set[Row], Long) = {
+      val out = Dedup.typoPairs(rows.toDF("id", "nm"), "id", "nm")
+      val pairs = out.collect().toSet
+      val cand = new AdaptiveSparkPlanHelper {}.collect(out.queryExecution.executedPlan) {
+        case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "__kh")) =>
+          j.metrics("numOutputRows").value
+      }
+      assert(cand.size == 1, s"one candidate join expected, got $cand")
+      (pairs, cand.head)
+    }
+    val (pairs, candRows) = run(named)
+    val (withNulls, candRowsWithNulls) = run(named ++ nulls)
+    assert(pairs.size == 2 && withNulls == pairs, s"$withNulls vs $pairs")
+    // a hashed NULL key put all 2,000 rows in one bucket: ~2M join rows
+    assert(candRowsWithNulls == candRows,
+      s"candidate join rows: $candRowsWithNulls with NULL names vs $candRows without")
   }
 
   test("modularity: exact integers on bridged cliques, trivial partition scores zero") {

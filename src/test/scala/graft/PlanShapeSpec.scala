@@ -691,6 +691,30 @@ class PlanShapeSpec extends AnyFunSuite {
     val pruned = FileManifest.readPruned(spark, appended, "user_id", 6L, 10L)
     val full = ev.filter(col("user_id").between(6, 10))
     assert(pruned.count() == full.count())
+
+    // 24 files stat in one job of at most one task per core, and the
+    // stats equal the driver-side reads of the same files, 8 at a time
+    spark.range(0, 2400, 1, 24).write.parquet(s"$tmp/wide")
+    val jobTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobTasks.add(js.stageInfos.map(_.numTasks).sum)
+    }
+    spark.sparkContext.addSparkListener(l)
+    val wide = try FileManifest.buildManifest(spark, s"$tmp/wide", "id")
+      finally {
+        org.apache.spark.sql.graftshim.SparkShims.drainListenerBus(spark)
+        spark.sparkContext.removeSparkListener(l)
+      }
+    assert(wide.size == 24)
+    val byEight = wide.map(_.path).grouped(8)
+      .foldLeft(Seq.empty[FileManifest.FileStats])(
+        FileManifest.append(_, spark, _, "id"))
+    assert(wide == byEight)
+    import scala.jdk.CollectionConverters._
+    val tasks = jobTasks.asScala.toSeq
+    assert(tasks.nonEmpty && tasks.forall(_ <= spark.sparkContext.defaultParallelism),
+      s"footer stats must run at most one task per core: $tasks")
   }
 
   test("bloom-join rule injects a probe-side prefilter and preserves the result") {

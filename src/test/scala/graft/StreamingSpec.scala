@@ -767,6 +767,61 @@ class StreamingSpec extends AnyFunSuite {
       s"GBP order has no rate -> null (dropped by to_json): ${gbp.head}")
   }
 
+  test("a 100-file trigger lists its files in one task per core; rows == batch enrich") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_listing").toString
+    // file i of each source holds event second i: one EUR and one USD
+    // rate, three orders. Every order matches a rate, so the left
+    // outer join holds no row back for the watermark.
+    def at(i: Int) = java.time.Instant.parse("2024-01-01T00:00:00Z").plusSeconds(i)
+    for (d <- Seq("orders", "rates")) Files.createDirectories(Paths.get(root, d))
+    for (i <- 0 until 100) {
+      Files.write(Paths.get(root, "rates", f"r$i%03d.json"), Seq("EUR", "USD")
+        .map(c => s"""{"exchangeRateTime": "${at(i)}", "currency": "$c", "rate": ${i + 1}}""")
+        .mkString("\n").getBytes)
+      Files.write(Paths.get(root, "orders", f"o$i%03d.json"), Seq("EUR", "USD", "EUR")
+        .zipWithIndex.map { case (c, k) =>
+          s"""{"id": ${3 * i + k}, "orderTime": "${at(i)}", "amount": ${k + 1}, "currency": "$c"}"""
+        }.mkString("\n").getBytes)
+    }
+    val listingTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).map(_.getProperty("spark.job.description", ""))
+            .exists(d => d.startsWith("Listing leaf files") && d.contains(root)))
+          listingTasks.add(js.stageInfos.map(_.numTasks).sum)
+    }
+    def src(d: String) = spark.readStream.format("text")
+      .option("maxFilesPerTrigger", "100").load(s"$root/$d")
+    spark.sparkContext.addSparkListener(l)
+    val q = OrderEnrichmentJob.pipeline(src("orders"), src("rates"))
+      .writeStream.format("memory").queryName("listing_enriched")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try q.awaitTermination()
+    finally {
+      q.stop()
+      org.apache.spark.sql.graftshim.SparkShims.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    val tasks = listingTasks.asScala.toSeq
+    // Spark lists a getBatch of more than 32 files in a job; uncapped,
+    // that job runs one task per file (100 here)
+    assert(tasks.size >= 2 && tasks.forall(_ <= 4),
+      s"listing jobs must run at most one task per core: $tasks")
+    val streamed = spark.sql("SELECT value FROM listing_enriched").as[String]
+      .collect().sorted
+    import graft.sources.Json
+    val batch = Json.toJsonLines(OrderEnrichmentJob.enrich(
+        Json.parse(spark.read.text(s"$root/orders"), Json.orderSchema),
+        Json.parse(spark.read.text(s"$root/rates"), Json.exchangeRateSchema),
+        Duration.ofSeconds(5)))
+      .as[String].collect().sorted
+    assert(streamed.nonEmpty && streamed.sameElements(batch),
+      s"stream ${streamed.length} rows vs batch ${batch.length}")
+  }
+
   test("source config: file and memory wired; kafka reaches the connector lookup") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
