@@ -22,6 +22,16 @@ import org.apache.spark.sql.SparkSession
   * so a 100-file trigger paid that 100 times. Raising Spark's 32-path
   * threshold instead would list serially on the driver, one round trip
   * per file on an object store; the cap keeps the listing distributed.
+  *
+  * Streams: the RocksDB provider below backs graft's keyed-state
+  * operators, `IntervalJoin.streaming` among them (list state and
+  * timers are column families of one store per partition). The
+  * enrichment job's interval join runs on that operator, not on Spark's
+  * `StreamingSymmetricHashJoinExec`, whose constructor broadcasts this
+  * session's Hadoop conf: planning copies the node about 18 times per
+  * micro-batch, and the serialized conf (~114 KB) took ~40% of a small
+  * trigger. `stateFormatVersion=3` below now governs only SQL
+  * stream-stream joins, which keep Spark's operator.
   */
 object GraftSession {
   private val LocalMaster = """local(?:\[(\d+|\*)(?:\s*,\s*\d+)?\])?""".r
@@ -72,13 +82,15 @@ object GraftSession {
       // setting for frequent small commits.
       .config("spark.sql.streaming.stateStore.rocksdb" +
         ".changelogCheckpointing.enabled", "true")
-      // Stream-stream join state format 3: a partition's four join-state
-      // maps live as column families of ONE RocksDB instance, so each
-      // task commits one store (and writes one changelog) per trigger
-      // instead of four. Needs the RocksDB provider above — the
-      // HDFS-backed provider has no column families and refuses it at
-      // query start. A checkpoint records its format, so a query
-      // restarted from an older checkpoint keeps that checkpoint's format.
+      // Stream-stream join state format 3, for SQL stream-stream joins
+      // (the enrichment job runs graft's keyed-state join instead, see
+      // the object doc): a partition's four join-state maps live as
+      // column families of ONE RocksDB instance, so each task commits
+      // one store (and writes one changelog) per trigger instead of
+      // four. Needs the RocksDB provider above — the HDFS-backed
+      // provider has no column families and refuses it at query start.
+      // A checkpoint records its format, so a query restarted from an
+      // older checkpoint keeps that checkpoint's format.
       .config("spark.sql.streaming.join.stateFormatVersion", "3")
       .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
       .config("spark.hadoop.fs.file.impl", classOf[graft.shims.NioLocalFileSystem].getName)

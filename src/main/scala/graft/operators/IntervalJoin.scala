@@ -2,8 +2,14 @@ package graft.operators
 
 import java.time.Duration
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, Encoder, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.types.{LongType, Metadata, StructField, StructType}
 
 /** Event-time interval join: pairs (l, r) with l.key = r.key and
   * r.time in (l.time - delta, l.time].
@@ -63,6 +69,80 @@ object IntervalJoin {
       .drop(lb("__graft_bucket_op")).drop(rb("__graft_bucket_op"))
   }
 
+  /** Stream-stream interval join: `bucketed`'s (key, bucket) scheme run
+    * as one keyed-state operator (`transformWithState`, event time,
+    * append) over a tagged union of both watermarked streams, instead of
+    * Spark's `StreamingSymmetricHashJoinExec`. Same rows as Spark's
+    * stream-stream join with the same condition: rows at or below the
+    * watermark are dropped on arrival by the same late-row rule, a
+    * null-key left row is one null row under `left_outer`, and a row
+    * with a null key or time never matches.
+    *
+    * Why not Spark's join: its exec node broadcasts the session's Hadoop
+    * conf (~114 KB, 10–15 ms to serialize) in its constructor, and
+    * planning copies the node about 18 times per micro-batch, so a small
+    * trigger spent ~40% of its time re-serializing that conf. Its state
+    * protocol also costs ≈5 puts and ≈12 gets per row; this operator
+    * makes a few per key and trigger.
+    *
+    * State per (key, bucket): the left rows and the right rows, each in
+    * an appended `ListState`, and one event-time timer at the bucket's
+    * end. A right row is copied into buckets b and b+1 (as in
+    * `bucketed`), so each matching pair meets in exactly one key and
+    * left rows are never duplicated. Once the watermark passes the
+    * bucket's end no unexpired row can reach the key; the timer then
+    * emits the left rows without a match as null rows (`left_outer`)
+    * and clears the key. At that point the key holds every right row
+    * that could match its left rows, so no matched flag is stored.
+    *
+    * Column names of the two sides must be disjoint (the output is
+    * left columns ++ right columns, as in a join), and both time
+    * columns must carry a watermark. */
+  def streaming(
+      left: DataFrame, right: DataFrame,
+      leftKey: String, rightKey: String,
+      leftTime: String, rightTime: String,
+      delta: Duration, joinType: String = "inner"): DataFrame = {
+    val deltaUs = delta.toMillis * 1000L
+    require(deltaUs > 0, "delta must be positive")
+    require(joinType == "inner" || joinType == "left_outer",
+      s"join type must be inner or left_outer, not $joinType")
+    require(left.isStreaming && right.isStreaming, "both sides must be streams; use bucketed")
+    val clash = left.columns.toSet.intersect(right.columns.toSet)
+    require(clash.isEmpty, s"column names on both sides: ${clash.mkString(", ")}")
+    val outer = joinType == "left_outer"
+    // watermark metadata stays on `__graft_t` alone: one event-time
+    // column for the operator, none in its state or output
+    val plain = (s: StructType) => StructType(s.map(_.copy(metadata = Metadata.empty)))
+    val (lSchema, rSchema) = (plain(left.schema), plain(right.schema))
+    val keyType = lSchema(leftKey).dataType
+    // the filters Spark infers for the same join: a null key or time can
+    // never match; under left_outer a null-key left row still comes out
+    val l = (if (outer) left else left.where(col(leftKey).isNotNull))
+      .where(col(leftTime).isNotNull)
+    val r = right.where(col(rightKey).isNotNull && col(rightTime).isNotNull)
+    def fields(df: DataFrame) = struct(df.columns.map(c => col(c).as(c, Metadata.empty)): _*)
+    val rb = bucketCol(col(rightTime), deltaUs)
+    // the first union side's `__graft_t` keeps its watermark metadata,
+    // which is what the operator's late-row filter reads
+    val tagged = l.select(lit(true).as("__graft_left"), col(leftKey).as("__graft_key"),
+        bucketCol(col(leftTime), deltaUs).as("__graft_bucket"), col(leftTime).as("__graft_t"),
+        fields(left).as("__graft_l"), lit(null).cast(rSchema).as("__graft_r"))
+      .union(r.select(lit(false).as("__graft_left"), col(rightKey).cast(keyType).as("__graft_key"),
+        explode(array(rb, rb + 1)).as("__graft_bucket"), col(rightTime).as("__graft_t"),
+        lit(null).cast(lSchema).as("__graft_l"), fields(right).as("__graft_r")))
+    val keySchema = StructType(Seq(StructField("__graft_key", keyType),
+      StructField("__graft_bucket", LongType)))
+    val outSchema = StructType(lSchema ++ rSchema.map(f => f.copy(nullable = f.nullable || outer)))
+    val proc = new IntervalJoinProcessor(ExpressionEncoder(lSchema), ExpressionEncoder(rSchema),
+      lSchema.fieldIndex(leftTime), rSchema.fieldIndex(rightTime), rSchema.length, deltaUs, outer)
+    tagged.groupBy(col("__graft_key"), col("__graft_bucket"))
+      .as[Row, Row](ExpressionEncoder(keySchema), ExpressionEncoder(plain(tagged.schema)))
+      .transformWithState(proc, TimeMode.EventTime(), OutputMode.Append())(
+        ExpressionEncoder(outSchema))
+      .toDF()
+  }
+
   /** Naive plan (equi-join on key + range filter). Correct, and fine
     * when the key is high-cardinality; used in tests as the oracle for
     * `bucketed`. */
@@ -76,5 +156,69 @@ object IntervalJoin {
       unix_micros(right(rightTime)) <= unix_micros(left(leftTime)) &&
       unix_micros(right(rightTime)) > unix_micros(left(leftTime)) - deltaUs
     left.join(right, cond, joinType)
+  }
+}
+
+/** The keyed state of `IntervalJoin.streaming` for one (key, bucket).
+  * Input rows are `(isLeft, key, bucket, t, left, right)`; the state
+  * encoders are built once on the driver and shipped with the
+  * processor. A null key only ever comes with left rows under
+  * `left_outer` (the operator filters the rest), and never matches. */
+private[graft] class IntervalJoinProcessor(
+    leftEnc: Encoder[Row], rightEnc: Encoder[Row],
+    leftTime: Int, rightTime: Int, rightWidth: Int, deltaUs: Long, outer: Boolean)
+    extends StatefulProcessor[Row, Row, Row] {
+  @transient private var lefts: ListState[Row] = _
+  @transient private var rights: ListState[Row] = _
+  private val noMatch = Row.fromSeq(Seq.fill(rightWidth)(null))
+
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    lefts = getHandle.getListState("left", leftEnc, TTLConfig.NONE)
+    rights = getHandle.getListState("right", rightEnc, TTLConfig.NONE)
+  }
+
+  private def micros(row: Row, i: Int): Long = DateTimeUtils.anyToMicros(row.get(i))
+  private def matches(lt: Long, rt: Long): Boolean = rt <= lt && rt > lt - deltaUs
+  private def joined(l: Row, r: Row): Row = Row.fromSeq(l.toSeq ++ r.toSeq)
+
+  override def handleInputRows(key: Row, rows: Iterator[Row],
+      timerValues: TimerValues): Iterator[Row] = {
+    val (ls, rs) = rows.toVector.partition(_.getBoolean(0))
+    val newL = ls.map(_.getStruct(4))
+    val newR = rs.map(_.getStruct(5))
+    if (key.isNullAt(0)) return newL.iterator.map(joined(_, noMatch))
+    val out = ArrayBuffer.empty[Row]
+    def probe(ls: Iterable[Row], rs: Iterable[Row]): Unit = {
+      val rts = rs.map(r => (r, micros(r, rightTime)))
+      for (l <- ls; lt = micros(l, leftTime); (r, rt) <- rts if matches(lt, rt))
+        out += joined(l, r)
+    }
+    // new right rows meet the stored left rows, then new left rows meet
+    // every right row; each pair is seen once
+    if (newR.nonEmpty) probe(lefts.get().toVector, newR)
+    if (newL.nonEmpty) {
+      probe(newL, rights.get().toVector ++ newR)
+      lefts.appendList(newL.toArray)
+    }
+    if (newR.nonEmpty) rights.appendList(newR.toArray)
+    // one timer per key, at the bucket's end (consumed to the end: the
+    // scan holds a store iterator)
+    if (getHandle.listTimers().toList.isEmpty)
+      getHandle.registerTimer((key.getLong(1) + 1) * deltaUs / 1000)
+    out.iterator
+  }
+
+  override def handleExpiredTimer(key: Row, timerValues: TimerValues,
+      expiredTimerInfo: ExpiredTimerInfo): Iterator[Row] = {
+    val unmatched = if (!outer) Vector.empty else {
+      val rts = rights.get().map(micros(_, rightTime)).toVector
+      lefts.get().filter { l =>
+        val lt = micros(l, leftTime)
+        !rts.exists(matches(lt, _))
+      }.map(joined(_, noMatch)).toVector
+    }
+    lefts.clear()
+    rights.clear()
+    unmatched.iterator
   }
 }

@@ -17,13 +17,13 @@ import graft.sources.Json
   * join -> append stream -> JSON sink. Here: two raw JSON sources
   * (any readStream: kafka/file/socket/memory — anything with a
   * string `value` column) -> `from_json` with explicit schemas ->
-  * `withWatermark` -> stream-stream interval join with an event-time
-  * constraint (Spark GC's join state from the watermark + bound) ->
-  * `to_json` sink.
+  * `withWatermark` -> event-time interval join -> `to_json` sink.
   *
-  * `enrich` is engine-agnostic: given batch frames it produces the
-  * identical result via the time-bucketed batch interval join
-  * (IntervalJoin.bucketed), which is the 100 TB-safe plan.
+  * `enrich` is engine-agnostic: two streams run through graft's keyed
+  * stream interval join (IntervalJoin.streaming, whose timers clear
+  * each key once the watermark passes it), batch frames through the
+  * time-bucketed batch join (IntervalJoin.bucketed, the 100 TB-safe
+  * plan); both give the same rows.
   */
 object OrderEnrichmentJob {
   /** Reference POJOs (Order.java, ExchangeRate.java, Result.java). */
@@ -39,19 +39,10 @@ object OrderEnrichmentJob {
     */
   def enrich(orders: DataFrame, rates: DataFrame, delta: Duration): DataFrame = {
     val r = rates.withColumnRenamed("currency", "r_currency")
-    val joined =
-      if (orders.isStreaming || rates.isStreaming) {
-        // Stream-stream: express the bound directly on the watermarked
-        // timestamp columns so Spark derives state-cleanup thresholds.
-        val cond = orders("currency") === r("r_currency") &&
-          r("exchangeRateTime") <= orders("orderTime") &&
-          r("exchangeRateTime") > orders("orderTime") - expr(
-            s"INTERVAL ${delta.toMillis} MILLISECOND")
-        orders.join(r, cond, "left_outer")
-      } else {
-        IntervalJoin.bucketed(orders, r, "currency", "r_currency",
-          "orderTime", "exchangeRateTime", delta, "left_outer")
-      }
+    val join = if (orders.isStreaming && rates.isStreaming) IntervalJoin.streaming _
+      else IntervalJoin.bucketed _
+    val joined = join(orders, r, "currency", "r_currency", "orderTime", "exchangeRateTime",
+      delta, "left_outer")
     joined.select(
       col("id"),
       timestamp_to_string(col("orderTime")).as("order_time"),

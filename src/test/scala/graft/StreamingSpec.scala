@@ -2,11 +2,13 @@ package graft
 
 import java.time.Duration
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.StreamIntervalJoinSpec.sparkJoinPipeline
 import graft.functions.BloomMightContain
 import graft.streaming.{CorpusIngest, OrderEnrichmentJob, StatefulOps, StreamingDedup}
 
@@ -60,19 +62,21 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   /** Enrichment pipeline over two MemoryStreams; every emitted JSON line
-    * lands in the returned buffer before its batch commits. */
-  def startEnrichment(checkpoint: Option[String] = None): (MemoryStream[String],
-      MemoryStream[String], StreamingQuery, collection.mutable.Buffer[String]) = {
+    * lands in the returned buffer before its batch commits. `pipeline`
+    * maps the two raw JSON-line streams to the output lines. */
+  def startEnrichment(checkpoint: Option[String] = None,
+      pipeline: (DataFrame, DataFrame) => DataFrame =
+        OrderEnrichmentJob.pipeline(_, _, Duration.ofSeconds(5)))
+      : (MemoryStream[String], MemoryStream[String], StreamingQuery,
+        collection.mutable.Buffer[String]) = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val orders = MemoryStream[String]
     val rates = MemoryStream[String]
     val lines = collection.mutable.ArrayBuffer[String]()
-    val w = OrderEnrichmentJob.pipeline(
-        orders.toDF().toDF("value"), rates.toDF().toDF("value"),
-        Duration.ofSeconds(5))
+    val w = pipeline(orders.toDF().toDF("value"), rates.toDF().toDF("value"))
       .writeStream.foreachBatch {
-        (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        (b: DataFrame, _: Long) =>
           val got = b.as[String].collect()
           lines.synchronized { lines ++= got }
           ()
@@ -82,30 +86,40 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("a rates-only trigger keeps its rates in join state (no bloom on stream-stream joins)") {
-    val (orders, rates, q, lines) = startEnrichment()
-    try {
-      def lastPlan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
-        .lastExecution.optimizedPlan
-      // the rate arrives in a trigger of its own: the orders side of
-      // that trigger is empty, and a bloom built from it would reject
-      // the rate before it reaches join state
-      rates.addData(rateJson("EUR", 3))
-      q.processAllAvailable()
-      val ratesOnly = lastPlan
-      orders.addData(orderJson(8, "EUR"))
-      q.processAllAvailable()
-      assert(lines.exists(r => r.contains("\"id\":8") && r.contains("\"converted_amount\":30")),
-        s"order 8 must match the rate of the earlier trigger: [${lines.mkString("; ")}]")
-      for (plan <- Seq(ratesOnly, lastPlan))
-        assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[BloomMightContain]))),
-          s"stream-stream join got a bloom prefilter:\n$plan")
-    } finally q.stop()
+    /** The rate in a trigger of its own, whose orders side is empty (a
+      * bloom built from it would reject the rate before it reaches join
+      * state), then the order; gives both triggers' optimized plans and
+      * the second one's exec nodes. */
+    def rateThenOrder(pipeline: (DataFrame, DataFrame) => DataFrame) = {
+      val (orders, rates, q, lines) = startEnrichment(pipeline = pipeline)
+      try {
+        val sq = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        rates.addData(rateJson("EUR", 3))
+        q.processAllAvailable()
+        val ratesOnly = sq.lastExecution.optimizedPlan
+        orders.addData(orderJson(8, "EUR"))
+        q.processAllAvailable()
+        assert(lines.exists(r => r.contains("\"id\":8") && r.contains("\"converted_amount\":30")),
+          s"order 8 must match the rate of the earlier trigger: [${lines.mkString("; ")}]")
+        (Seq(ratesOnly, sq.lastExecution.optimizedPlan),
+          sq.lastExecution.executedPlan.collect { case p => p.getClass.getSimpleName })
+      } finally q.stop()
+    }
+    rateThenOrder(OrderEnrichmentJob.pipeline(_, _, Duration.ofSeconds(5)))
+    // the bloom rule meets stream-stream joins in Spark's own join
+    val (plans, nodes) = rateThenOrder(sparkJoinPipeline)
+    assert(nodes.contains("StreamingSymmetricHashJoinExec"), nodes)
+    for (plan <- plans)
+      assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[BloomMightContain]))),
+        s"stream-stream join got a bloom prefilter:\n$plan")
   }
 
   test("join state: one RocksDB store per partition; a format-2 checkpoint keeps its 16") {
+    // Spark's stream-stream join (a SQL stream-stream join plans to it;
+    // the enrichment pipeline runs graft's keyed-state join instead)
     def instances(q: StreamingQuery) =
       q.lastProgress.stateOperators.map(_.numStateStoreInstances).sum
-    val (orders, rates, fresh, _) = startEnrichment()
+    val (orders, rates, fresh, _) = startEnrichment(pipeline = sparkJoinPipeline)
     try {
       rates.addData(rateJson("EUR", 3))
       orders.addData(orderJson(1, "EUR"))
@@ -117,7 +131,7 @@ class StreamingSpec extends AnyFunSuite {
     val formatKey = "spark.sql.streaming.join.stateFormatVersion"
     spark.conf.set(formatKey, "2")
     val (_, r2, before, _) =
-      try startEnrichment(Some(ckpt)) finally spark.conf.unset(formatKey)
+      try startEnrichment(Some(ckpt), sparkJoinPipeline) finally spark.conf.unset(formatKey)
     try {
       r2.addData(rateJson("USD", 4))
       before.processAllAvailable()
@@ -125,7 +139,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally before.stop()
     // restarted under the session's default format: the checkpoint's
     // format wins, and the rate stored before the restart still matches
-    val (o3, r3, after, lines) = startEnrichment(Some(ckpt))
+    val (o3, r3, after, lines) = startEnrichment(Some(ckpt), sparkJoinPipeline)
     try {
       // the new source is rebuilt up to the offset the checkpoint
       // committed; that rate is not read again
