@@ -114,6 +114,16 @@ object SparkShims {
         originStats = None).newInstance())
   }
 
+  /** The files `spark.read` lists under `paths`, by Spark's own
+    * listing: hidden names skipped, directories walked to their leaves,
+    * serially up to the parallel-discovery threshold and as one job
+    * above it. */
+  def listLeafFiles(spark: SparkSession,
+      paths: Seq[org.apache.hadoop.fs.Path]): Seq[org.apache.hadoop.fs.FileStatus] =
+    org.apache.spark.sql.execution.datasources.InMemoryFileIndex.bulkListLeafFiles(
+      paths, spark.sparkContext.hadoopConfiguration, null, spark)
+      .flatMap(_._2)
+
   /** Serializable wrapper for a Hadoop Configuration (the class Spark
     * itself ships to tasks that do filesystem work; it is
     * `private[spark]`, hence surfaced through this shim). */

@@ -2,12 +2,16 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 
 /** Driver-side parquet IO for SIDECAR tables — the bounded metadata
   * every index keeps next to its data (stats rows, centroids,
@@ -20,8 +24,60 @@ import org.apache.spark.sql.SparkSession
   * and files written by Spark earlier read back fine — including
   * Spark's 3-level LIST encoding, which [[addLongs]]/[[getLongs]]
   * mirror), so only the transport changes, never the format.
+  *
+  * Every driver-side parquet OPEN in graft goes through [[openFooter]]
+  * or [[groupReader]]. Parquet's convenience entry points
+  * (`ParquetFileReader.open(InputFile)`, `ParquetReader.builder(
+  * readSupport, path)`) each build a fresh Hadoop `Configuration`,
+  * which parses the core/mapred/yarn default XML (~1,100 entries,
+  * ~10 ms) on every open — a footer itself reads in under 1 ms. The
+  * helpers hand parquet the session's conf instead. [[readFiles]]
+  * uses them to give `spark.read.parquet` over graft-written files the
+  * schema Spark would infer, read here from one footer instead of in a
+  * one-task Spark job.
   */
 private[graft] object DriverParquet {
+
+  /** A footer reader for `p` whose options come from `conf` (the
+    * session's Hadoop conf), not from a fresh `Configuration`. */
+  def openFooter(conf: Configuration, p: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(p, conf),
+      HadoopReadOptions.builder(conf, p).build())
+
+  /** A reader of every row of `p` as example `Group`s over `conf`.
+    * Built on a `HadoopInputFile`, whose builder takes the file's conf;
+    * the path-based builder makes its own `Configuration` first. */
+  def groupReader(conf: Configuration, p: Path): ParquetReader[Group] =
+    new ParquetReader.Builder[Group](HadoopInputFile.fromPath(p, conf)) {
+      override protected def getReadSupport(): ReadSupport[Group] =
+        new GroupReadSupport()
+    }.build()
+
+  /** `spark.read.parquet(paths: _*)` with the schema Spark would infer
+    * passed in, so no schema-inference job runs. Mirrors Spark's
+    * `ParquetUtils.inferSchema` with `mergeSchema` off: among the
+    * files Spark's listing finds, `_common_metadata` wins, then `_metadata`,
+    * then the first data file by full path, and its footer converts
+    * with Spark's own `readSchemaFromFooter` under the session's SQL
+    * conf (so `nanosAsLong` and field ids come out as Spark's would). */
+  def readFiles(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val leaves = org.apache.spark.sql.graftshim.SparkShims.listLeafFiles(spark,
+      paths.map { s =>
+        val p = new Path(s)
+        p.getFileSystem(conf).makeQualified(p)
+      }).map(_.getPath).sortBy(_.toString)
+    val pick = leaves.find(_.getName == "_common_metadata")
+      .orElse(leaves.find(_.getName == "_metadata"))
+      .orElse(leaves.headOption)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no parquet file to read a schema from under ${paths.mkString(", ")}"))
+    val r = openFooter(conf, pick)
+    val footer = try new Footer(pick, r.getFooter) finally r.close()
+    val schema = ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(schema).parquet(paths: _*)
+  }
 
   def schema(s: String): MessageType = MessageTypeParser.parseMessageType(s)
 
@@ -72,8 +128,7 @@ private[graft] object DriverParquet {
     val out = Seq.newBuilder[Group]
     files.sortBy(_.getName)
       .foreach { f =>
-        val r = org.apache.parquet.hadoop.ParquetReader
-          .builder(new GroupReadSupport(), f).withConf(conf).build()
+        val r = groupReader(conf, f)
         try {
           var g = r.read()
           while (g != null) { out += g; g = r.read() }

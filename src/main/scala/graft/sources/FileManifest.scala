@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
@@ -210,11 +208,15 @@ object FileManifest {
   /** Build the manifest by reading ONLY parquet footers. The RESULT is
     * driver-side — one row per file is exactly the cardinality a
     * manifest is supposed to have (a 100 TB table at 1 GB/file is 10^5
-    * rows, a side table, not a dataset) — but the footer READS run as a
-    * distributed job: 10^5 one-at-a-time driver fetches would be
-    * minutes of dead time, while 10^5 footers across a cluster is
-    * seconds. (On a real deployment the write path emits these rows
-    * directly and even the footer pass disappears.) */
+    * rows, a side table, not a dataset). The footer READS follow
+    * Spark's own listing rule ([[footerPass]]): up to
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files
+    * (default 32) they run on the driver, where a footer reads in under
+    * a millisecond; beyond it they run as a distributed job, since 10^5
+    * one-at-a-time driver fetches would be minutes of dead time while
+    * 10^5 footers across a cluster is seconds. (On a real deployment
+    * the write path emits these rows directly and even the footer pass
+    * disappears.) */
   def buildManifest(spark: SparkSession, dir: String,
       column: String): Seq[FileStats] =
     buildManifests(spark, dir, Seq(column))(column)
@@ -240,31 +242,32 @@ object FileManifest {
     footerPass(spark, paths)(footerStats(_, _, cols))
   }
 
-  /** `read` over each footer in `paths`, in order, distributed
-    * when the file count makes a job worthwhile. A handful of files
-    * stays on the driver (job setup costs more than the reads); beyond
-    * that, executors each read a slice of footers and ship back only
-    * the O(files) results. One task per core, not per footer: each
-    * task deserializes the Hadoop conf it carries, which costs more
-    * than reading a footer. */
+  /** `read` over each footer in `paths`, in order. Up to
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files —
+    * the rule Spark applies to listing the same files — the reads run
+    * serially on the driver over the session's Hadoop conf: a job
+    * would cost more per task than the reads it carries. Beyond that,
+    * executors each read a slice of footers and ship back only the
+    * O(files) results, one task per core, not per footer. The conf
+    * rides as a broadcast, so each executor deserializes it once (a
+    * local-mode task never does) instead of every task carrying it. */
   private def footerPass[T: scala.reflect.ClassTag](spark: SparkSession,
-      paths: Seq[String])(read: (Configuration, Path) => T): Seq[T] =
-    if (paths.size <= 8) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      paths.map(p => read(conf, new Path(p)))
-    } else {
-      val sconf = org.apache.spark.sql.graftshim.SparkShims
-        .serializableConf(spark.sparkContext.hadoopConfiguration)
-      spark.sparkContext
-        .parallelize(paths,
-          math.min(paths.size, spark.sparkContext.defaultParallelism))
-        .map(p => read(sconf.value, new Path(p)))
+      paths: Seq[String])(read: (Configuration, Path) => T): Seq[T] = {
+    val sc = spark.sparkContext
+    if (paths.size <= spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+      paths.map(p => read(sc.hadoopConfiguration, new Path(p)))
+    else {
+      val conf = sc.broadcast(org.apache.spark.sql.graftshim.SparkShims
+        .serializableConf(sc.hadoopConfiguration))
+      sc.parallelize(paths, math.min(paths.size, sc.defaultParallelism))
+        .map(p => read(conf.value.value, new Path(p)))
         .collect().toSeq
     }
+  }
 
   private def footerStats(conf: Configuration, file: Path,
       columns: Seq[String]): Map[String, FileStats] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = DriverParquet.openFooter(conf, file)
     try {
       val blocks = reader.getFooter.getBlocks.asScala
       var rows = 0L
@@ -348,10 +351,11 @@ object FileManifest {
   }
 
   /** Footer-stat string bounds for every parquet file under `dir` —
-    * distributed like [[buildManifests]] beyond a handful of files. */
+    * read like [[buildManifests]]: on the driver up to the parallel-discovery
+    * threshold, distributed beyond it. */
   private def strFooterStats(conf: Configuration, p: Path,
       column: String, truncateTo: Int): StrFileStats = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+    val reader = DriverParquet.openFooter(conf, p)
     try {
       var rows = 0L; var nulls = 0L
       var mn: String = null; var mx: String = null
@@ -401,8 +405,8 @@ object FileManifest {
     val survivors = pruneString(manifest, lo, hi)
     val residual = col(column).between(lo, hi)
     if (survivors.nonEmpty)
-      spark.read.parquet(survivors.map(_.path): _*).where(residual)
-    else spark.read.parquet(manifest.head.path).where(lit(false))
+      DriverParquet.readFiles(spark, survivors.map(_.path)).where(residual)
+    else DriverParquet.readFiles(spark, Seq(manifest.head.path)).where(lit(false))
   }
 
   /** Files whose [min, max] intersects [lo, hi] — the survivors the
@@ -452,7 +456,7 @@ object FileManifest {
   def buildBloomManifest(spark: SparkSession, dir: String, column: String,
       m: Int = 512, k: Int = 3): Seq[BloomStats] = {
     require(m >= 64 && m % 64 == 0 && k >= 1, s"bad bloom shape m=$m k=$k")
-    val df = spark.read.parquet(dir)
+    val df = DriverParquet.readFiles(spark, Seq(dir))
     val v = col(column).cast("long")
     val probes = (0 until k).map(i =>
       pmod(conv(substring(md5(concat_ws(",", lit(i), v)), 1, 15), 16, 10)
@@ -501,8 +505,8 @@ object FileManifest {
     val survivors = bloomSurvivors(blooms, keys)
     val residual = col(column).isin(keys.map(java.lang.Long.valueOf): _*)
     if (survivors.nonEmpty)
-      spark.read.parquet(survivors.map(_.path): _*).where(residual)
-    else spark.read.parquet(blooms.head.path).where(lit(false))
+      DriverParquet.readFiles(spark, survivors.map(_.path)).where(residual)
+    else DriverParquet.readFiles(spark, Seq(blooms.head.path)).where(lit(false))
   }
 
   /** Incremental maintenance — the operations a live table needs so the
@@ -535,8 +539,8 @@ object FileManifest {
     // error (the full-scan mirror of the same predicate returns 0
     // rows); read one file for the schema and keep zero of its rows
     val src =
-      if (survivors.nonEmpty) spark.read.parquet(survivors: _*)
-      else spark.read.parquet(manifest.head.path).where(lit(false))
+      if (survivors.nonEmpty) DriverParquet.readFiles(spark, survivors)
+      else DriverParquet.readFiles(spark, Seq(manifest.head.path)).where(lit(false))
     src.filter(col(column) >= lo && col(column) <= hi)
   }
 
@@ -602,9 +606,9 @@ object FileManifest {
         val r = k.agg(min("k").as("lo"), max("k").as("hi")).head
         prune(manifest, r.getLong(0), r.getLong(1))
       } else pruneForKeys(manifest, keys.toSeq).files
-    if (survivors.nonEmpty) spark.read.parquet(survivors.map(_.path): _*)
+    if (survivors.nonEmpty) DriverParquet.readFiles(spark, survivors.map(_.path))
     // all files pruned: an empty fact side is the legitimate result
-    else spark.read.parquet(manifest.head.path).where(lit(false))
+    else DriverParquet.readFiles(spark, Seq(manifest.head.path)).where(lit(false))
   }
 
   /** METADATA-ONLY ranged aggregation: `count(*) / min / max` of
@@ -624,7 +628,7 @@ object FileManifest {
     val scanned =
       if (partial.isEmpty) (0L, None: Option[Long], None: Option[Long])
       else {
-        val r = spark.read.parquet(partial.map(_.path): _*)
+        val r = DriverParquet.readFiles(spark, partial.map(_.path))
           .where(col(column) >= lo && col(column) <= hi)
           .agg(count(lit(1)), min(col(column)).cast("long"),
             max(col(column)).cast("long")).head
@@ -805,7 +809,7 @@ object FileManifest {
       sortCol: String, rewriteDir: String, prefix: String,
       exchange: Boolean)(transform: DataFrame => DataFrame)
       : Seq[FileStats] = {
-    val src = spark.read.parquet(affected.sorted: _*)
+    val src = DriverParquet.readFiles(spark, affected.sorted)
     rewriteStaged(src, affected.map(Seq(_)), binned = false, levels = 1,
       src.columns.toSeq, sortCol, ids = None, exchange,
       s"$rewriteDir/_rw", rewriteDir, Some(sortCol))(transform)(
@@ -840,7 +844,7 @@ object FileManifest {
     * restriction) — the post-DML read companion to [[readPruned]]. */
   def readAll(spark: SparkSession, manifest: Seq[FileStats]): DataFrame = {
     require(manifest.nonEmpty, "empty manifest")
-    spark.read.parquet(manifest.map(_.path): _*)
+    DriverParquet.readFiles(spark, manifest.map(_.path))
   }
 
   /** A MERGE-ON-READ table: the data manifest plus equality-delete
@@ -891,7 +895,7 @@ object FileManifest {
     val base = readAll(spark, table.data)
     if (table.deleteFiles.isEmpty) base
     else {
-      val dels = spark.read.parquet(table.deleteFiles: _*)
+      val dels = DriverParquet.readFiles(spark, table.deleteFiles)
         .select(col(table.column).as("__g_delkey")).distinct()
       base.join(broadcast(dels),
         base(table.column) === col("__g_delkey"), "left_anti")
@@ -914,7 +918,7 @@ object FileManifest {
   def applyDeletesMoR(spark: SparkSession, table: MorTable,
       rewriteDir: String): MorTable = {
     if (table.deleteFiles.isEmpty) return table
-    val delKeys = spark.read.parquet(table.deleteFiles: _*)
+    val delKeys = DriverParquet.readFiles(spark, table.deleteFiles)
       .select(col(table.column).as("__g_delkey"))
       // belt-and-braces vs sidecars written by older builds: a NULL
       // key deletes nothing, so dropping it here preserves readMoR
@@ -994,7 +998,7 @@ object FileManifest {
   def aggPartial(spark: SparkSession, files: Seq[FileStats],
       keys: Seq[String], valueCol: String): DataFrame = {
     require(files.nonEmpty, "empty file set")
-    spark.read.parquet(files.map(_.path): _*)
+    DriverParquet.readFiles(spark, files.map(_.path))
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_rows"),
         sum(col(valueCol).cast("decimal(18,2)")).as("agg_sum"))
@@ -1105,9 +1109,9 @@ object FileManifest {
     // file reads, which the plan-shape spec asserts via inputFiles
     lazy val schemaOnly = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      spark.read.parquet(mNew.head.path).schema)
+      DriverParquet.readFiles(spark, Seq(mNew.head.path)).schema)
     def read(fs: Seq[FileStats]): DataFrame =
-      if (fs.isEmpty) schemaOnly else spark.read.parquet(fs.map(_.path): _*)
+      if (fs.isEmpty) schemaOnly else DriverParquet.readFiles(spark, fs.map(_.path))
     val addedDf = read(added)
     val removedDf = read(removed)
     addedDf.exceptAll(removedDf).withColumn("change_type", lit("I"))
@@ -1148,7 +1152,7 @@ object FileManifest {
       column: String, changes: DataFrame, rewriteDir: String,
       deleteCol: String, newFileRows: Long = 1L << 20): Seq[FileStats] = {
     require(manifest.nonEmpty, "empty manifest")
-    val dataCols = spark.read.parquet(manifest.head.path).columns
+    val dataCols = DriverParquet.readFiles(spark, Seq(manifest.head.path)).columns
     require(changes.columns.toSet == dataCols.toSet + deleteCol,
       "changeset must carry the target schema plus the delete flag")
     // one row per non-null key (count_distinct ignores NULLs, so count
@@ -1203,7 +1207,7 @@ object FileManifest {
             rewriteDir, "mrg", exchange = true) { df =>
             val t = df.join(broadcast(mapDf),
               col("__fk") === col("__mfk")).drop("__mfk", "__fk")
-            val c = spark.read.parquet(stage)
+            val c = DriverParquet.readFiles(spark, Seq(stage))
               .where(col("_file_idx") >= 0)
             t.as("t").join(c.as("c"),
                 col("t.__idx") === col("c._file_idx") &&
@@ -1225,7 +1229,7 @@ object FileManifest {
     val newDirs =
       if (!slices.contains(-1)) Nil
       else {
-        val fresh = spark.read.parquet(s"$stage/_file_idx=-1")
+        val fresh = DriverParquet.readFiles(spark, Seq(s"$stage/_file_idx=-1"))
           .where(!col(deleteCol))
           .select(dataCols.map(col).toSeq: _*)
         val n = fresh.count()
@@ -1284,7 +1288,7 @@ object FileManifest {
     out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
     val bins = planCompaction(manifest, targetRows).map(_.map(_.path))
     if (bins.isEmpty) return
-    val src = spark.read.parquet(bins.flatten.sorted: _*)
+    val src = DriverParquet.readFiles(spark, bins.flatten.sorted)
     rewriteStaged(src, bins, binned = true, levels = 1, src.columns.toSeq,
       sortCol, ids = None, exchange = true, s"$outDir/_cmp", outDir,
       statCol = None)(identity)(i => (f"bin_$i%05d", ""))
@@ -1542,7 +1546,7 @@ object FileManifest {
   def plannedSurvivors(spark: SparkSession, versionDir: String,
       keepPartitions: Option[Seq[String]], lo: Long, hi: Long)
       : Seq[String] = {
-    val cat = spark.read.parquet(versionDir)
+    val cat = DriverParquet.readFiles(spark, Seq(versionDir))
     val kept = keepPartitions match {
       case Some(ps) => cat.where(col("partition").isin(ps: _*))
       case None => cat
@@ -1575,7 +1579,7 @@ object FileManifest {
     else {
       val column = readColumnSidecar(spark, s"$vdir/_column")
       val survivors = plannedSurvivors(spark, vdir, keepPartitions, lo, hi)
-      val anyFile = spark.read.parquet(vdir).select("path")
+      val anyFile = DriverParquet.readFiles(spark, Seq(vdir)).select("path")
         .limit(1).head.getString(0)
       readSurvivors(spark, survivors, anyFile, column, keepPartitions,
         lo, hi)
@@ -1674,10 +1678,7 @@ object FileManifest {
       dir: Path)(each: org.apache.parquet.example.data.Group => Unit)
       : Unit =
     catalogParquetFiles(fs, dir).foreach { f =>
-      val r = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          f)
-        .withConf(conf).build()
+      val r = DriverParquet.groupReader(conf, f)
       try {
         var g = r.read()
         while (g != null) { each(g); g = r.read() }
@@ -1704,7 +1705,7 @@ object FileManifest {
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = new Path(path)
     catalogParquetFiles(dir.getFileSystem(conf), dir).map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val r = DriverParquet.openFooter(conf, f)
       try r.getRecordCount finally r.close()
     }.sum
   }

@@ -5,7 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Parquet loaders for the test corpus (TPC-H-ish star schema +
   * `events` stream table + `documents`/`embeddings` LLM-pipeline
   * tables). Loading is schema-on-read from parquet footers so Catalyst
-  * gets exact types and can push filters/projections into the scan.
+  * gets exact types and can push filters/projections into the scan;
+  * the footer is read on the driver ([[DriverParquet.readFiles]]), so
+  * a load starts no schema-inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -21,7 +23,7 @@ object Tables {
       // TimestampType every downstream consumer and oracle expects).
       // Dispatch on the footer type so both generations load.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = DriverParquet.readFiles(spark, Seq(s"$dir/$name.parquet"))
       import org.apache.spark.sql.functions.{col, expr}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       df.schema("ts").dataType match {
@@ -32,7 +34,7 @@ object Tables {
         case _ => df
       }
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      DriverParquet.readFiles(spark, Seq(s"$dir/$name.parquet"))
     }
   }
 

@@ -692,9 +692,10 @@ class PlanShapeSpec extends AnyFunSuite {
     val full = ev.filter(col("user_id").between(6, 10))
     assert(pruned.count() == full.count())
 
-    // 24 files stat in one job of at most one task per core, and the
-    // stats equal the driver-side reads of the same files, 8 at a time
-    spark.range(0, 2400, 1, 24).write.parquet(s"$tmp/wide")
+    // 40 files (above the default parallel-discovery threshold of 32)
+    // stat in one job of at most one task per core, and the stats
+    // equal the driver-side reads of the same files, 8 at a time
+    spark.range(0, 4000, 1, 40).write.parquet(s"$tmp/wide")
     val jobTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -706,7 +707,7 @@ class PlanShapeSpec extends AnyFunSuite {
         org.apache.spark.sql.graftshim.SparkShims.drainListenerBus(spark)
         spark.sparkContext.removeSparkListener(l)
       }
-    assert(wide.size == 24)
+    assert(wide.size == 40)
     val byEight = wide.map(_.path).grouped(8)
       .foldLeft(Seq.empty[FileManifest.FileStats])(
         FileManifest.append(_, spark, _, "id"))
@@ -715,6 +716,31 @@ class PlanShapeSpec extends AnyFunSuite {
     val tasks = jobTasks.asScala.toSeq
     assert(tasks.nonEmpty && tasks.forall(_ <= spark.sparkContext.defaultParallelism),
       s"footer stats must run at most one task per core: $tasks")
+  }
+
+  test("write mix: one pass of f1, f13 and f22 runs at most 30 Spark jobs") {
+    // perfbench's batch_write pass: each builder call, then a noop
+    // write of its rows. Footers and the schemas of graft's own files
+    // are read on the driver, so the jobs left are the queries' own
+    // writes and AQE stages.
+    val mix = Seq("f1_manifest_prune", "f13_delete_mor", "f22_sql_delete")
+    def pass(): Unit = mix.foreach(n =>
+      SparkEntry.queries(n)(spark, dir).write.format("noop").mode("overwrite").save())
+    pass() // the f22 table and the layout dirs exist from here on
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graftshim.SparkShims.drainListenerBus(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      pass()
+      org.apache.spark.sql.graftshim.SparkShims.drainListenerBus(spark)
+    } finally sc.removeSparkListener(l)
+    info(s"${jobs.get} Spark jobs in one write-mix pass")
+    assert(jobs.get <= 30, s"${jobs.get} Spark jobs in one write-mix pass")
   }
 
   test("bloom-join rule injects a probe-side prefilter and preserves the result") {
