@@ -25,13 +25,14 @@ import org.apache.spark.sql.SparkSession
   *
   * Streams: the RocksDB provider below backs graft's keyed-state
   * operators, `IntervalJoin.streaming` among them (list state and
-  * timers are column families of one store per partition). The
-  * enrichment job's interval join runs on that operator, not on Spark's
+  * timers are column families of one store per partition). An interval
+  * join of two watermarked streams, in SQL or with `Dataset.join`, runs
+  * on that operator (`plans.RewriteIntervalJoin`), not on Spark's
   * `StreamingSymmetricHashJoinExec`, whose constructor broadcasts this
   * session's Hadoop conf: planning copies the node about 18 times per
   * micro-batch, and the serialized conf (~114 KB) took ~40% of a small
-  * trigger. `stateFormatVersion=3` below now governs only SQL
-  * stream-stream joins, which keep Spark's operator.
+  * trigger. `stateFormatVersion=3` below governs only the stream-stream
+  * joins that rule does not take, which keep Spark's operator.
   */
 object GraftSession {
   private val LocalMaster = """local(?:\[(\d+|\*)(?:\s*,\s*\d+)?\])?""".r
@@ -82,12 +83,11 @@ object GraftSession {
       // setting for frequent small commits.
       .config("spark.sql.streaming.stateStore.rocksdb" +
         ".changelogCheckpointing.enabled", "true")
-      // Stream-stream join state format 3, for SQL stream-stream joins
-      // (the enrichment job runs graft's keyed-state join instead, see
-      // the object doc): a partition's four join-state maps live as
-      // column families of ONE RocksDB instance, so each task commits
-      // one store (and writes one changelog) per trigger instead of
-      // four. Needs the RocksDB provider above — the HDFS-backed
+      // Stream-stream join state format 3, for the joins left on Spark's
+      // operator (see the object doc): a partition's four join-state
+      // maps live as column families of ONE RocksDB instance, so each
+      // task commits one store (and writes one changelog) per trigger
+      // instead of four. Needs the RocksDB provider above — the HDFS-backed
       // provider has no column families and refuses it at query start.
       // A checkpoint records its format, so a query restarted from an
       // older checkpoint keeps that checkpoint's format.

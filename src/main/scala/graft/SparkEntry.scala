@@ -257,15 +257,7 @@ object SparkEntry {
     }),
     "ref_interval_join" -> ((s, dir) => {
       val e = T(s, dir, "events")
-      val o = RefTables.orders(e)
-      val r = RefTables.rates(e).withColumnRenamed("currency", "r_currency")
-      IntervalJoin.bucketed(o, r, "currency", "r_currency",
-          "orderTime", "exchangeRateTime", Duration.ofHours(6), "left_outer")
-        .select(col("id"),
-          timestamp_to_string(col("orderTime")).as("order_time"),
-          col("amount").as("original_amount"),
-          (col("amount") * col("rate")).as("converted_amount"),
-          timestamp_to_string(col("exchangeRateTime")).as("rate_time"))
+      OrderEnrichmentJob.enrich(RefTables.orders(e), RefTables.rates(e), Duration.ofHours(6))
         .orderBy(col("id").asc, col("rate_time").asc_nulls_first)
     }),
     "ref_asof_join" -> ((s, dir) => {
@@ -2519,7 +2511,7 @@ object SparkEntry {
       // capacity floors at 75 (the verify SFs keep their exact cell
       // layout) and derives from the corpus above that — with 25%
       // slack so the append phase has cell headroom — letting the
-      // entry scale with replicated ScaleBench dirs; the full-probe
+      // entry scale with replicated table dirs; the full-probe
       // serve makes the RESULT capacity-independent either way
       val cap = math.max(75L, math.ceil(emb.count() * 1.25 / 8.0).toLong)
       phase("build")(graft.sources.VectorIndex.build(emb, "vec_id",

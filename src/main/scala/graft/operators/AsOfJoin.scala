@@ -214,16 +214,17 @@ object AsOfJoin {
     SparkShims.ofRows(spark, plan)
   }
 
-  /** Skew-resistant as-of join with a hard staleness bound: bucketed
-    * interval join (see IntervalJoin) then latest-match-per-left-row.
+  /** Skew-resistant as-of join with a hard staleness bound: an interval
+    * join (time-bucketed by `plans.RewriteIntervalJoin`, see
+    * IntervalJoin) then latest-match-per-left-row.
     * Requires a unique left row id for the argmax. */
   def backwardBounded(
       left: DataFrame, right: DataFrame,
       key: String, leftId: String, leftTime: String, rightTime: String,
       tolerance: Duration, joinType: String = "left_outer"): DataFrame = {
-    val joined = IntervalJoin.bucketed(
-      left, right.withColumnRenamed(key, "__g_rkey"),
-      key, "__g_rkey", leftTime, rightTime, tolerance, joinType)
+    val r = right.withColumnRenamed(key, "__g_rkey")
+    val joined = left.join(r, left(key) === r("__g_rkey") && r(rightTime) <= left(leftTime) &&
+      r(rightTime) > left(leftTime) - lit(tolerance), joinType)
     val w = Window.partitionBy(col(leftId))
       .orderBy(col(rightTime).desc_nulls_last)
     joined.withColumn("__g_rn", row_number().over(w))

@@ -4,79 +4,56 @@ import java.time.Duration
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Encoder, Row}
+import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, IntegralDivide, Literal, Pmod, Subtract, UnixMicros}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SparkShims
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
-import org.apache.spark.sql.types.{LongType, Metadata, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, Metadata, StructType}
 
 /** Event-time interval join: pairs (l, r) with l.key = r.key and
   * r.time in (l.time - delta, l.time].
   *
   * This is the reference's flagship operator (StreamingJob.java:94-105:
   * `o.currency = r.currency AND o.eventtime >= r.eventtime AND
-  * r.eventtime > o.eventtime - INTERVAL '5' SECOND`).
+  * r.eventtime > o.eventtime - INTERVAL '5' SECOND`). Callers write it
+  * as a plain join, in SQL or with `Dataset.join`;
+  * `plans.RewriteIntervalJoin` matches the condition and plans it.
   *
   * Scale design: the naive plan equi-joins on the key alone. With a
   * low-cardinality key (5 currencies) that assigns entire key domains
   * to single shuffle partitions — at 100 TB, 5 partitions own all the
-  * data. `bucketed` instead hashes both sides into time buckets of
-  * width delta (each right row duplicated into buckets [b, b+1], the
-  * only two a left row in-bucket b can see), and joins on
-  * (key, bucket): join cardinality now scales with the time domain,
-  * so 1000 executors all get work regardless of key skew. The exact
-  * range predicate is applied post-join; each matching pair satisfies
-  * it in exactly one bucket copy, so no duplicates arise and
-  * left-outer semantics are preserved (the left side is never
-  * duplicated).
+  * data. The rule instead hashes both sides into time buckets of width
+  * delta (each right row duplicated into buckets [b, b+1], the only two
+  * a left row in bucket b can see), and joins on (key, bucket): join
+  * cardinality now scales with the time domain, so 1000 executors all
+  * get work regardless of key skew. The exact range predicate is
+  * applied per pair; each matching pair satisfies it in exactly one
+  * bucket copy, so no duplicates arise and left-outer semantics are
+  * preserved (the left side is never duplicated).
   */
 object IntervalJoin {
-  /** Exact integer floor-div bucket — `(x - pmod(x, d)) div d` — the
-    * SAME formulation as `plans.RewriteIntervalJoin.bucket`, so the
-    * operator and the optimizer rewrite can never disagree on a
-    * boundary row. `floor(x / d)` over doubles loses exactness past
-    * 2^52 µs and can misbucket a boundary timestamp. */
-  private[graft] def bucketCol(t: org.apache.spark.sql.Column, deltaUs: Long) = {
-    val x = unix_micros(t)
-    val d = lit(deltaUs)
-    call_function("div", x - pmod(x, d), d)
+  /** The bucket of a timestamp, an exact integer floor-div —
+    * `(x - pmod(x, d)) div d` — shared by the batch and the stream
+    * plan. `floor(x / d)` over doubles loses exactness past 2^52 µs
+    * and can misbucket a boundary timestamp. */
+  private[graft] def bucket(t: Expression, deltaUs: Long): Expression = {
+    val x = UnixMicros(t)
+    val d = Literal(deltaUs, LongType)
+    IntegralDivide(Subtract(x, Pmod(x, d)), d)
   }
 
-  /** Time-bucketed interval join (the 100 TB plan).
-    *
-    * @param joinType "inner" or "left_outer" (left side never duplicated)
-    * @param leftKey/rightKey  equality key column names
-    * @param leftTime/rightTime timestamp column names
-    */
-  def bucketed(
-      left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTime: String, rightTime: String,
-      delta: Duration, joinType: String = "inner"): DataFrame = {
-    val deltaUs = delta.toMillis * 1000L
-    require(deltaUs > 0, "delta must be positive")
-    val lb = left.withColumn("__graft_bucket_op", bucketCol(col(leftTime), deltaUs))
-    val rb = right
-      .withColumn("__graft_bucket_rb", bucketCol(col(rightTime), deltaUs))
-      .withColumn("__graft_bucket_op", explode(array(col("__graft_bucket_rb"), col("__graft_bucket_rb") + 1)))
-      .drop("__graft_bucket_rb")
-    val cond = lb(leftKey) === rb(rightKey) &&
-      lb("__graft_bucket_op") === rb("__graft_bucket_op") &&
-      unix_micros(rb(rightTime)) <= unix_micros(lb(leftTime)) &&
-      unix_micros(rb(rightTime)) > unix_micros(lb(leftTime)) - deltaUs
-    lb.join(rb, cond, joinType)
-      .drop(lb("__graft_bucket_op")).drop(rb("__graft_bucket_op"))
-  }
-
-  /** Stream-stream interval join: `bucketed`'s (key, bucket) scheme run
-    * as one keyed-state operator (`transformWithState`, event time,
-    * append) over a tagged union of both watermarked streams, instead of
-    * Spark's `StreamingSymmetricHashJoinExec`. Same rows as Spark's
-    * stream-stream join with the same condition: rows at or below the
-    * watermark are dropped on arrival by the same late-row rule, a
-    * null-key left row is one null row under `left_outer`, and a row
-    * with a null key or time never matches.
+  /** The stream plan of a matched interval join of two watermarked
+    * streams: the bucket scheme run as one keyed-state operator
+    * (`transformWithState`, event time, append) over a tagged union of
+    * both sides, instead of Spark's `StreamingSymmetricHashJoinExec`.
+    * Same rows as Spark's stream-stream join with the same condition:
+    * rows at or below the watermark are dropped on arrival by the same
+    * late-row rule, a null-key left row is one null row under
+    * `outer`, and a row with a null key or time never matches.
     *
     * Why not Spark's join: its exec node broadcasts the session's Hadoop
     * conf (~114 KB, 10–15 ms to serialize) in its constructor, and
@@ -87,65 +64,61 @@ object IntervalJoin {
     *
     * State per (key, bucket): the left rows and the right rows, each in
     * an appended `ListState`, and one event-time timer at the bucket's
-    * end. A right row is copied into buckets b and b+1 (as in
-    * `bucketed`), so each matching pair meets in exactly one key and
-    * left rows are never duplicated. Once the watermark passes the
-    * bucket's end no unexpired row can reach the key; the timer then
-    * emits the left rows without a match as null rows (`left_outer`)
-    * and clears the key. At that point the key holds every right row
-    * that could match its left rows, so no matched flag is stored.
+    * end. A right row is copied into buckets b and b+1, so each
+    * matching pair meets in exactly one key and left rows are never
+    * duplicated. Once the watermark passes the bucket's end no
+    * unexpired row can reach the key; the timer then emits the left
+    * rows without a match as null rows (`outer`) and clears the key. At
+    * that point the key holds every right row that could match its left
+    * rows, so no matched flag is stored.
     *
-    * Column names of the two sides must be disjoint (the output is
-    * left columns ++ right columns, as in a join), and both time
-    * columns must carry a watermark. */
-  def streaming(
-      left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTime: String, rightTime: String,
-      delta: Duration, joinType: String = "inner"): DataFrame = {
-    val deltaUs = delta.toMillis * 1000L
-    require(deltaUs > 0, "delta must be positive")
-    require(joinType == "inner" || joinType == "left_outer",
-      s"join type must be inner or left_outer, not $joinType")
-    require(left.isStreaming && right.isStreaming, "both sides must be streams; use bucketed")
-    val clash = left.columns.toSet.intersect(right.columns.toSet)
-    require(clash.isEmpty, s"column names on both sides: ${clash.mkString(", ")}")
-    val outer = joinType == "left_outer"
-    // watermark metadata stays on `__graft_t` alone: one event-time
-    // column for the operator, none in its state or output
-    val plain = (s: StructType) => StructType(s.map(_.copy(metadata = Metadata.empty)))
-    val (lSchema, rSchema) = (plain(left.schema), plain(right.schema))
-    val keyType = lSchema(leftKey).dataType
+    * Output: the left columns, then the right, named `_0`, `_1`, …;
+    * the rule aliases them back to the join's attributes. */
+  private[graft] def streaming(spark: SparkSession, left: LogicalPlan, right: LogicalPlan,
+      leftKey: Expression, rightKey: Expression, leftTime: Attribute, rightTime: Attribute,
+      deltaUs: Long, outer: Boolean): LogicalPlan = {
+    import SparkShims.column
+    // each side as one struct, named by position (the sides may share
+    // names); watermark metadata stays on `__graft_t` alone: one
+    // event-time column for the operator, none in its state or output
+    def fields(p: LogicalPlan, from: Int) = struct(p.output.zipWithIndex.map { case (a, i) =>
+      column(a).as(s"_${from + i}", Metadata.empty) }: _*)
+    val (lKey, rKey) = (column(leftKey), column(rightKey))
+    val (lt, rt) = (column(leftTime), column(rightTime))
     // the filters Spark infers for the same join: a null key or time can
-    // never match; under left_outer a null-key left row still comes out
-    val l = (if (outer) left else left.where(col(leftKey).isNotNull))
-      .where(col(leftTime).isNotNull)
-    val r = right.where(col(rightKey).isNotNull && col(rightTime).isNotNull)
-    def fields(df: DataFrame) = struct(df.columns.map(c => col(c).as(c, Metadata.empty)): _*)
-    val rb = bucketCol(col(rightTime), deltaUs)
+    // never match; under outer a null-key left row still comes out
+    val l = SparkShims.ofRows(spark, left)
+      .where(if (outer) lt.isNotNull else lt.isNotNull && lKey.isNotNull)
+    val r = SparkShims.ofRows(spark, right).where(rKey.isNotNull && rt.isNotNull)
+    val rb = column(bucket(rightTime, deltaUs))
     // the first union side's `__graft_t` keeps its watermark metadata,
-    // which is what the operator's late-row filter reads
-    val tagged = l.select(lit(true).as("__graft_left"), col(leftKey).as("__graft_key"),
-        bucketCol(col(leftTime), deltaUs).as("__graft_bucket"), col(leftTime).as("__graft_t"),
-        fields(left).as("__graft_l"), lit(null).cast(rSchema).as("__graft_r"))
-      .union(r.select(lit(false).as("__graft_left"), col(rightKey).cast(keyType).as("__graft_key"),
-        explode(array(rb, rb + 1)).as("__graft_bucket"), col(rightTime).as("__graft_t"),
-        lit(null).cast(lSchema).as("__graft_l"), fields(right).as("__graft_r")))
-    val keySchema = StructType(Seq(StructField("__graft_key", keyType),
-      StructField("__graft_bucket", LongType)))
+    // which is what the operator's late-row filter reads; each side's
+    // missing struct comes out null
+    val tagged = l.select(lit(true).as("__graft_left"), lKey.as("__graft_key"),
+        column(bucket(leftTime, deltaUs)).as("__graft_bucket"), lt.as("__graft_t"),
+        fields(left, 0).as("__graft_l"))
+      .unionByName(r.select(lit(false).as("__graft_left"), rKey.as("__graft_key"),
+        explode(array(rb, rb + 1)).as("__graft_bucket"), rt.as("__graft_t"),
+        fields(right, left.output.size).as("__graft_r")), allowMissingColumns = true)
+    val plain = StructType(tagged.schema.map(_.copy(metadata = Metadata.empty)))
+    val Seq(lSchema, rSchema) = Seq("__graft_l", "__graft_r")
+      .map(plain(_).dataType.asInstanceOf[StructType])
+    val keySchema = StructType(Seq(plain("__graft_key"), plain("__graft_bucket")))
     val outSchema = StructType(lSchema ++ rSchema.map(f => f.copy(nullable = f.nullable || outer)))
     val proc = new IntervalJoinProcessor(ExpressionEncoder(lSchema), ExpressionEncoder(rSchema),
-      lSchema.fieldIndex(leftTime), rSchema.fieldIndex(rightTime), rSchema.length, deltaUs, outer)
-    tagged.groupBy(col("__graft_key"), col("__graft_bucket"))
-      .as[Row, Row](ExpressionEncoder(keySchema), ExpressionEncoder(plain(tagged.schema)))
+      left.output.indexWhere(_.exprId == leftTime.exprId),
+      right.output.indexWhere(_.exprId == rightTime.exprId), rSchema.length, deltaUs, outer)
+    SparkShims.logicalPlan(tagged.groupBy(col("__graft_key"), col("__graft_bucket"))
+      .as[Row, Row](ExpressionEncoder(keySchema), ExpressionEncoder(plain))
       .transformWithState(proc, TimeMode.EventTime(), OutputMode.Append())(
         ExpressionEncoder(outSchema))
-      .toDF()
+      .toDF())
   }
 
-  /** Naive plan (equi-join on key + range filter). Correct, and fine
-    * when the key is high-cardinality; used in tests as the oracle for
-    * `bucketed`. */
+  /** Naive plan (equi-join on key + range filter over `unix_micros`, a
+    * condition the rule does not match). Correct, and fine when the key
+    * is high-cardinality; used in tests as the oracle for the rule's
+    * plans. */
   def naive(
       left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,

@@ -20,6 +20,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     ext.injectOptimizerRule(_ => RewriteIntervalJoin)
+    ext.injectPostHocResolutionRule(session => RewriteIntervalJoin.AtStreamStart(session))
     ext.injectOptimizerRule(_ => RewriteRangeJoin)
     ext.injectOptimizerRule(_ => InjectBloomJoinFilter)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)

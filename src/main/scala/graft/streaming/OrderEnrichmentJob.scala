@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.GraftFunctions.timestamp_to_string
-import graft.operators.IntervalJoin
 import graft.sources.Json
 
 /** The reference job (StreamingJob.java) recreated Spark-native.
@@ -19,11 +18,11 @@ import graft.sources.Json
   * string `value` column) -> `from_json` with explicit schemas ->
   * `withWatermark` -> event-time interval join -> `to_json` sink.
   *
-  * `enrich` is engine-agnostic: two streams run through graft's keyed
-  * stream interval join (IntervalJoin.streaming, whose timers clear
-  * each key once the watermark passes it), batch frames through the
-  * time-bucketed batch join (IntervalJoin.bucketed, the 100 TB-safe
-  * plan); both give the same rows.
+  * `enrich` is the reference's join written as a `Dataset.join`, and
+  * engine-agnostic: `plans.RewriteIntervalJoin` plans two watermarked
+  * streams on graft's keyed stream interval join (whose timers clear
+  * each key once the watermark passes it) and batch frames on the
+  * time-bucketed batch join (the 100 TB-safe plan).
   */
 object OrderEnrichmentJob {
   /** Reference POJOs (Order.java, ExchangeRate.java, Result.java). */
@@ -35,21 +34,21 @@ object OrderEnrichmentJob {
     * interval join on currency with rate time in (orderTime - delta,
     * orderTime], projecting the Result shape. Plus `rate_time` so the
     * output has a deterministic total order (an order can match
-    * several rates).
+    * several rates). A plain join: `plans.RewriteIntervalJoin` runs it
+    * on graft's keyed-state operator when both sides are watermarked
+    * streams, and as the time-bucketed join over batch frames; both
+    * give the same rows.
     */
-  def enrich(orders: DataFrame, rates: DataFrame, delta: Duration): DataFrame = {
-    val r = rates.withColumnRenamed("currency", "r_currency")
-    val join = if (orders.isStreaming && rates.isStreaming) IntervalJoin.streaming _
-      else IntervalJoin.bucketed _
-    val joined = join(orders, r, "currency", "r_currency", "orderTime", "exchangeRateTime",
-      delta, "left_outer")
-    joined.select(
-      col("id"),
-      timestamp_to_string(col("orderTime")).as("order_time"),
-      col("amount").as("original_amount"),
-      (col("amount") * col("rate")).as("converted_amount"),
-      timestamp_to_string(col("exchangeRateTime")).as("rate_time"))
-  }
+  def enrich(orders: DataFrame, rates: DataFrame, delta: Duration): DataFrame =
+    orders.join(rates, orders("currency") === rates("currency") &&
+        orders("orderTime") >= rates("exchangeRateTime") &&
+        rates("exchangeRateTime") > orders("orderTime") - lit(delta), "left_outer")
+      .select(
+        col("id"),
+        timestamp_to_string(col("orderTime")).as("order_time"),
+        col("amount").as("original_amount"),
+        (col("amount") * col("rate")).as("converted_amount"),
+        timestamp_to_string(col("exchangeRateTime")).as("rate_time"))
 
   /** Full streaming pipeline from raw JSON-line sources to a JSON-line
     * output stream; returns the unstarted output frame. */

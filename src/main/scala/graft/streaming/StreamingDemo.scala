@@ -8,8 +8,9 @@ import graft.GraftSession
   * of Order / ExchangeRate JSON lines (the reference's Kinesis Data
   * Generator shapes, README "Generate the Sample Data"), streams them
   * through `OrderEnrichmentJob.run` (file source -> watermarked
-  * interval join, graft's keyed-state `IntervalJoin.streaming` ->
-  * JSON-line sink), and prints the enriched output. The unmatched GBP
+  * interval join, which `plans.RewriteIntervalJoin` runs on graft's
+  * keyed-state operator -> JSON-line sink), and prints the enriched
+  * output. The unmatched GBP
   * order comes out as a null row once the heartbeat's watermark passes
   * the end of its join bucket (`delta` wide: 5 s here, 6 h in the
   * replay part).

@@ -2,6 +2,8 @@ package graft
 
 import java.time.Duration
 
+import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -72,13 +74,16 @@ class CoreSpec extends AnyFunSuite {
     assert(GraftHash.formatTimestampMicros(1500000L).toString == "1970-01-01 00:00:01.500")
   }
 
-  test("bucketed interval join == naive interval join (inner and left)") {
+  test("plain interval join (rule) == naive interval join (inner and left)") {
     val e = graft.sources.Tables.load(spark, dir, "events")
     val o = RefTables.orders(e)
     val r = RefTables.rates(e).withColumnRenamed("currency", "r_currency")
     for (jt <- Seq("inner", "left_outer")) {
-      val b = IntervalJoin.bucketed(o, r, "currency", "r_currency",
-        "orderTime", "exchangeRateTime", Duration.ofHours(6), jt)
+      val b = o.join(r, o("currency") === r("r_currency") &&
+        r("exchangeRateTime") <= o("orderTime") &&
+        r("exchangeRateTime") > o("orderTime") - lit(Duration.ofHours(6)), jt)
+      assert(castToImpl(b).queryExecution.optimizedPlan.exists(_.isInstanceOf[Generate]),
+        s"the rule must bucket the $jt join")
       val n = IntervalJoin.naive(o, r, "currency", "r_currency",
         "orderTime", "exchangeRateTime", Duration.ofHours(6), jt)
       assert(b.count() == n.count(), s"count mismatch for $jt")

@@ -4,19 +4,19 @@ import java.time.Duration
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.IntervalJoin
+import graft.StreamIntervalJoinSpec.{sqlPipeline, withoutRule}
 import graft.sources.Json
 import graft.streaming.OrderEnrichmentJob
 
-/** `IntervalJoin.streaming`, graft's keyed-state stream interval join,
-  * against Spark's stream-stream join of the same condition, and the
-  * enrichment pipeline that runs on it. */
+/** Stream interval joins through every front door (SQL, `Dataset.join`,
+  * `joinWith`, the enrichment pipeline) on graft's keyed-state operator,
+  * against Spark's stream-stream join of the same query. */
 class StreamIntervalJoinSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local(4)
   val delta = Duration.ofSeconds(5)
@@ -59,15 +59,30 @@ class StreamIntervalJoinSpec extends AnyFunSuite {
   def joinRun(join: (DataFrame, DataFrame) => DataFrame) = new Run((orders, rates) =>
     Json.toJsonLines(join(
       Json.parse(orders, Json.orderSchema).withWatermark("orderTime", "2 seconds"),
-      Json.parse(rates, Json.exchangeRateSchema).withColumnRenamed("currency", "r_currency")
-        .withWatermark("exchangeRateTime", "2 seconds"))))
+      Json.parse(rates, Json.exchangeRateSchema).withWatermark("exchangeRateTime", "2 seconds"))))
 
-  def sparkJoin(joinType: String)(o: DataFrame, r: DataFrame): DataFrame =
-    StreamIntervalJoinSpec.sparkJoin(o, r, delta, joinType)
+  /** The reference's condition (`currency` on both sides) in SQL over
+    * two temp views, with the upper bound spelled `upper`; every column
+    * of both sides comes out. */
+  def sqlJoin(joinType: String, upper: String)(o: DataFrame, r: DataFrame): DataFrame = {
+    o.createOrReplaceTempView("stream_orders")
+    r.createOrReplaceTempView("stream_rates")
+    spark.sql(s"""SELECT o.*, r.exchangeRateTime, r.currency AS r_currency, r.rate
+      FROM stream_orders o ${if (joinType == "inner") "JOIN" else "LEFT JOIN"} stream_rates r
+      ON o.currency = r.currency AND $upper
+        AND r.exchangeRateTime > o.orderTime - INTERVAL '5' SECOND""")
+  }
 
-  def graftJoin(joinType: String)(o: DataFrame, r: DataFrame): DataFrame =
-    IntervalJoin.streaming(o, r, "currency", "r_currency", "orderTime", "exchangeRateTime",
-      delta, joinType)
+  /** The same query as a `Dataset.join`, upper bound `r.t <= o.t`. */
+  def dfJoin(joinType: String)(o: DataFrame, r: DataFrame): DataFrame =
+    o.join(r, o("currency") === r("currency") && r("exchangeRateTime") <= o("orderTime") &&
+        r("exchangeRateTime") > o("orderTime") - lit(delta), joinType)
+      .select(o.columns.map(o(_)) ++ Seq(r("exchangeRateTime"), r("currency").as("r_currency"),
+        r("rate")): _*)
+
+  def execNodes(q: StreamingQuery): Seq[String] =
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      .collect { case p => p.getClass.getSimpleName }
 
   /** One trigger per step: (orders, rates). Watermark = max event time
     * seen - 2 s, the smaller of the two sides. */
@@ -101,26 +116,38 @@ class StreamIntervalJoinSpec extends AnyFunSuite {
     // heartbeat: watermark to 98 flushes every held row
     (Seq(order(99, 100, "XXX")), Seq(rate(100, "XXX", 1))))
 
+  /** The SQL form and the `Dataset.join` form, one upper-bound spelling
+    * each, against the same query started with the rule off. */
   def differential(joinType: String): Unit = {
-    val graft = joinRun(graftJoin(joinType))
-    val ref = joinRun(sparkJoin(joinType))
+    val graft = Seq(
+      "SQL" -> joinRun(sqlJoin(joinType, "o.orderTime >= r.exchangeRateTime")),
+      "Dataset.join" -> joinRun(dfJoin(joinType)))
+    val ref = withoutRule(spark)(joinRun(dfJoin(joinType)))
     try {
-      for ((os, rs) <- steps) { graft.step(os, rs); ref.step(os, rs) }
-      val (got, want) = (graft.rows.sorted, ref.rows.sorted)
-      assert(got == want, s"graft ${got.mkString("\n", "\n", "\n")} " +
-        s"Spark ${want.mkString("\n", "\n", "\n")}")
-      val ids = got.map(l => "\"id\":(\\d+)".r.findFirstMatchIn(l).map(_.group(1))).toSet
-      // the sequence exercises what it claims: the edge order's three
-      // matches, null rows, and late rows that both operators dropped
-      assert(got.count(_.contains("\"id\":4,")) == 3, got)
-      assert(!ids.contains(Some("12")) && !ids.contains(Some("10")), got)
-      if (joinType == "left_outer")
-        assert(ids.contains(Some("3")) && ids.contains(Some("9")) && ids.contains(Some("14")), got)
-      val dropped = graft.query.recentProgress.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
-      assert(dropped >= 2, s"late rows dropped by the operator: $dropped")
-      info(s"${got.size} rows, ${got.count(!_.contains("rate"))} null rows, $dropped late rows dropped")
-    } finally { graft.query.stop(); ref.query.stop() }
+      for ((os, rs) <- steps) { graft.foreach(_._2.step(os, rs)); ref.step(os, rs) }
+      assert(execNodes(ref.query).contains("StreamingSymmetricHashJoinExec"))
+      val want = ref.rows.sorted
+      for ((form, run) <- graft) {
+        val nodes = execNodes(run.query)
+        assert(nodes.contains("TransformWithStateExec") &&
+          !nodes.contains("StreamingSymmetricHashJoinExec"), s"$form: $nodes")
+        val got = run.rows.sorted
+        assert(got == want, s"$form ${got.mkString("\n", "\n", "\n")} " +
+          s"Spark ${want.mkString("\n", "\n", "\n")}")
+        val ids = got.map(l => "\"id\":(\\d+)".r.findFirstMatchIn(l).map(_.group(1))).toSet
+        // the sequence exercises what it claims: the edge order's three
+        // matches, null rows, and late rows that both operators dropped
+        assert(got.count(_.contains("\"id\":4,")) == 3, got)
+        assert(!ids.contains(Some("12")) && !ids.contains(Some("10")), got)
+        if (joinType == "left_outer")
+          assert(ids.contains(Some("3")) && ids.contains(Some("9")) && ids.contains(Some("14")), got)
+        val dropped = run.query.recentProgress.flatMap(_.stateOperators)
+          .map(_.numRowsDroppedByWatermark).sum
+        assert(dropped >= 2, s"$form: late rows dropped by the operator: $dropped")
+        info(s"$form: ${got.size} rows, ${got.count(!_.contains("rate"))} null rows, " +
+          s"$dropped late rows dropped")
+      }
+    } finally { graft.foreach(_._2.query.stop()); ref.query.stop() }
   }
 
   test("streaming interval join == Spark's stream-stream join (left_outer)") {
@@ -132,68 +159,93 @@ class StreamIntervalJoinSpec extends AnyFunSuite {
   }
 
   test("the enrichment pipeline runs one keyed-state operator: no Spark join, ≤ 6 broadcasts") {
-    val run = new Run(OrderEnrichmentJob.pipeline(_, _))
+    for ((form, pipeline) <- pipelines) {
+      val run = new Run(pipeline)
+      try {
+        run.step(Seq(order(1, 10, "EUR"), order(2, 20, "USD")), Seq(rate(9, "EUR", 2), rate(19, "USD", 3)))
+        val names = execNodes(run.query)
+        assert(names.contains("TransformWithStateExec") &&
+          !names.contains("StreamingSymmetricHashJoinExec"), s"$form: $names")
+        // a steady data trigger: rows of both sides inside the watermark
+        // (10 s) and below the max event time, so no no-data batch follows
+        val sc = spark.sparkContext
+        val (batch0, id0) = (run.query.lastProgress.batchId, sc.broadcast(0).id)
+        run.step(Seq(order(3, 15, "EUR"), order(4, 16, "USD")), Seq(rate(14, "EUR", 4)))
+        val made = sc.broadcast(0).id - id0 - 1
+        assert(run.query.lastProgress.batchId == batch0 + 1, s"$form: one micro-batch ran")
+        assert(run.rows.exists(_.contains("\"id\":3,")), run.rows)
+        assert(made <= 6, s"$form: $made broadcasts in one steady trigger (Spark's join: ~20)")
+        info(s"$form: $made broadcasts in one steady trigger")
+      } finally run.query.stop()
+    }
+  }
+
+  test("a joinWith of two watermarked streams starts and returns rows") {
+    val run = joinRun((o, r) => o.joinWith(r, o("currency") === r("currency") &&
+      r("exchangeRateTime") <= o("orderTime") && r("exchangeRateTime") > o("orderTime") - lit(delta))
+      .toDF())
     try {
-      run.step(Seq(order(1, 10, "EUR"), order(2, 20, "USD")), Seq(rate(9, "EUR", 2), rate(19, "USD", 3)))
-      val sq = run.query.asInstanceOf[StreamingQueryWrapper].streamingQuery
-      val names = sq.lastExecution.executedPlan.collect { case p => p.getClass.getSimpleName }
-      assert(names.contains("TransformWithStateExec") &&
-        !names.contains("StreamingSymmetricHashJoinExec"), names)
-      // a steady data trigger: rows of both sides inside the watermark
-      // (10 s) and below the max event time, so no no-data batch follows
-      val sc = spark.sparkContext
-      val (batch0, id0) = (sq.lastProgress.batchId, sc.broadcast(0).id)
-      run.step(Seq(order(3, 15, "EUR"), order(4, 16, "USD")), Seq(rate(14, "EUR", 4)))
-      val made = sc.broadcast(0).id - id0 - 1
-      assert(sq.lastProgress.batchId == batch0 + 1, "one micro-batch ran")
-      assert(run.rows.exists(_.contains("\"id\":3,")), run.rows)
-      assert(made <= 6, s"$made broadcasts in one steady trigger (Spark's join: ~20)")
-      info(s"$made broadcasts in one steady trigger")
+      for ((os, rs) <- steps) run.step(os, rs)
+      assert(run.rows.count(_.contains("\"id\":4,")) == 3, run.rows)
+      // an inner joinWith projects the join's columns into two structs
+      // above the join, which the rule still takes
+      assert(execNodes(run.query).contains("TransformWithStateExec"), execNodes(run.query))
     } finally run.query.stop()
   }
 
   test("a Spark-join checkpoint does not restart under the keyed-state join") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_join_ckpt").toString
-    val before = new Run(StreamIntervalJoinSpec.sparkJoinPipeline, Some(ckpt))
-    try {
-      before.step(Seq(order(1, 3, "EUR")), Seq(rate(1, "EUR", 2)))
-      assert(before.rows.nonEmpty)
-    } finally before.query.stop()
-    val after = new Run(OrderEnrichmentJob.pipeline(_, _), Some(ckpt))
-    try {
-      val e = intercept[StreamingQueryException] {
-        // the new source is rebuilt up to the committed offset first
-        after.step(Seq(order(1, 3, "EUR")), Seq(rate(1, "EUR", 2)))
-        after.step(Seq(order(2, 4, "EUR")), Nil)
-      }
-      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .map(_.getMessage).mkString(" / ")
-      assert(msg.contains("symmetricHashJoin") && msg.contains("transformWithStateExec"),
-        s"the error must name both operators: $msg")
-      assert(after.rows.isEmpty, "no batch may run on the old join state")
-    } finally after.query.stop()
+    for ((form, pipeline) <- pipelines) {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_join_ckpt").toString
+      val before = withoutRule(spark)(new Run(pipeline, Some(ckpt)))
+      try {
+        before.step(Seq(order(1, 3, "EUR")), Seq(rate(1, "EUR", 2)))
+        assert(before.rows.nonEmpty)
+        assert(execNodes(before.query).contains("StreamingSymmetricHashJoinExec"), form)
+      } finally before.query.stop()
+      val after = new Run(pipeline, Some(ckpt))
+      try {
+        val e = intercept[StreamingQueryException] {
+          // the new source is rebuilt up to the committed offset first
+          after.step(Seq(order(1, 3, "EUR")), Seq(rate(1, "EUR", 2)))
+          after.step(Seq(order(2, 4, "EUR")), Nil)
+        }
+        val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(_.getMessage).mkString(" / ")
+        assert(msg.contains("symmetricHashJoin") && msg.contains("transformWithStateExec"),
+          s"$form: the error must name both operators: $msg")
+        assert(after.rows.isEmpty, s"$form: no batch may run on the old join state")
+      } finally after.query.stop()
+    }
   }
+
+  /** The enrichment job as `OrderEnrichmentJob.pipeline` and as the
+    * reference's SQL. */
+  def pipelines: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
+    "enrich" -> (OrderEnrichmentJob.pipeline(_, _)), "SQL" -> sqlPipeline(spark))
 }
 
 object StreamIntervalJoinSpec {
-  /** `OrderEnrichmentJob.pipeline`'s sources, watermarks and condition
-    * on Spark's own stream-stream join: the plan a SQL stream-stream join
-    * gets, and the one the enrichment job ran on before its keyed join. */
-  def sparkJoinPipeline(rawOrders: DataFrame, rawRates: DataFrame): DataFrame = {
-    val o = Json.parse(rawOrders, Json.orderSchema).withWatermark("orderTime", "10 seconds")
-    val r = Json.parse(rawRates, Json.exchangeRateSchema)
-      .withColumnRenamed("currency", "r_currency")
-      .withWatermark("exchangeRateTime", "10 seconds")
-    Json.toJsonLines(sparkJoin(o, r, Duration.ofSeconds(5), "left_outer")
-      .select(col("id"), (col("amount") * col("rate")).as("converted_amount")))
+  /** `body` with `spark.graft.rewriteIntervalJoins=false`: a stream
+    * interval join whose query starts inside it runs on Spark's own
+    * stream-stream join. */
+  def withoutRule[A](spark: SparkSession)(body: => A): A = {
+    spark.conf.set("spark.graft.rewriteIntervalJoins", "false")
+    try body finally spark.conf.unset("spark.graft.rewriteIntervalJoins")
   }
 
-  /** The enrichment's interval join (orders `o`, rates `r` with
-    * `r_currency`) as Spark's own stream-stream join, the operator a SQL
-    * stream-stream join plans to. */
-  def sparkJoin(o: DataFrame, r: DataFrame, delta: Duration, joinType: String): DataFrame =
-    o.join(r, o("currency") === r("r_currency") &&
-      r("exchangeRateTime") <= o("orderTime") &&
-      r("exchangeRateTime") > o("orderTime") - expr(s"INTERVAL ${delta.toMillis} MILLISECOND"),
-      joinType)
+  /** `OrderEnrichmentJob.pipeline` as the reference writes it: SQL over
+    * two registered watermarked tables (StreamingJob.java:86-105). */
+  def sqlPipeline(spark: SparkSession)(rawOrders: DataFrame, rawRates: DataFrame): DataFrame = {
+    Json.parse(rawOrders, Json.orderSchema).withWatermark("orderTime", "10 seconds")
+      .createOrReplaceTempView("order_stream")
+    Json.parse(rawRates, Json.exchangeRateSchema).withWatermark("exchangeRateTime", "10 seconds")
+      .createOrReplaceTempView("rate_stream")
+    Json.toJsonLines(spark.sql("""
+      SELECT o.id, timestamp_to_string(o.orderTime) AS order_time,
+        o.amount AS original_amount, o.amount * r.rate AS converted_amount,
+        timestamp_to_string(r.exchangeRateTime) AS rate_time
+      FROM order_stream o LEFT JOIN rate_stream r ON o.currency = r.currency
+        AND o.orderTime >= r.exchangeRateTime
+        AND r.exchangeRateTime > o.orderTime - INTERVAL '5' SECOND"""))
+  }
 }

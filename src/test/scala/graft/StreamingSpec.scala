@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.StreamIntervalJoinSpec.sparkJoinPipeline
+import graft.StreamIntervalJoinSpec.withoutRule
 import graft.functions.BloomMightContain
 import graft.streaming.{CorpusIngest, OrderEnrichmentJob, StatefulOps, StreamingDedup}
 
@@ -107,7 +107,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     rateThenOrder(OrderEnrichmentJob.pipeline(_, _, Duration.ofSeconds(5)))
     // the bloom rule meets stream-stream joins in Spark's own join
-    val (plans, nodes) = rateThenOrder(sparkJoinPipeline)
+    val (plans, nodes) = withoutRule(spark)(rateThenOrder(OrderEnrichmentJob.pipeline(_, _)))
     assert(nodes.contains("StreamingSymmetricHashJoinExec"), nodes)
     for (plan <- plans)
       assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[BloomMightContain]))),
@@ -115,11 +115,13 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("join state: one RocksDB store per partition; a format-2 checkpoint keeps its 16") {
-    // Spark's stream-stream join (a SQL stream-stream join plans to it;
-    // the enrichment pipeline runs graft's keyed-state join instead)
+    // Spark's stream-stream join: the enrichment pipeline started with
+    // the interval join rule off
     def instances(q: StreamingQuery) =
       q.lastProgress.stateOperators.map(_.numStateStoreInstances).sum
-    val (orders, rates, fresh, _) = startEnrichment(pipeline = sparkJoinPipeline)
+    def sparkJoinEnrichment(checkpoint: Option[String]) =
+      withoutRule(spark)(startEnrichment(checkpoint))
+    val (orders, rates, fresh, _) = sparkJoinEnrichment(None)
     try {
       rates.addData(rateJson("EUR", 3))
       orders.addData(orderJson(1, "EUR"))
@@ -131,7 +133,7 @@ class StreamingSpec extends AnyFunSuite {
     val formatKey = "spark.sql.streaming.join.stateFormatVersion"
     spark.conf.set(formatKey, "2")
     val (_, r2, before, _) =
-      try startEnrichment(Some(ckpt), sparkJoinPipeline) finally spark.conf.unset(formatKey)
+      try sparkJoinEnrichment(Some(ckpt)) finally spark.conf.unset(formatKey)
     try {
       r2.addData(rateJson("USD", 4))
       before.processAllAvailable()
@@ -139,7 +141,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally before.stop()
     // restarted under the session's default format: the checkpoint's
     // format wins, and the rate stored before the restart still matches
-    val (o3, r3, after, lines) = startEnrichment(Some(ckpt), sparkJoinPipeline)
+    val (o3, r3, after, lines) = sparkJoinEnrichment(Some(ckpt))
     try {
       // the new source is rebuilt up to the offset the checkpoint
       // committed; that rate is not read again
