@@ -768,10 +768,12 @@ object Dedup {
               col("__nm").substr(i + 1,
                 length(col("__nm")) - i))))
           .otherwise(array().cast("array<string>")))).as("__key"))
-      // a NULL name is its own only key, and hash(NULL) is the seed:
-      // kept, every NULL-name row would pair with every other one
+      // a NULL name is its own only key, and xxhash64(NULL) is the
+      // seed: kept, every NULL-name row would pair with every other one.
+      // The key is 64-bit so candidate collisions stay rare at scale
+      // (pairs are verified by levenshtein after the join either way)
       .where(col("__key").isNotNull)
-      .select(col("__id"), hash(col("__key")).as("__kh"))
+      .select(col("__id"), xxhash64(col("__key")).as("__kh"))
     // dedupe the UNORDERED id pair (lo < hi) so each candidate enters
     // the distinct once, then orient the emitted pair by NAME order
     // after the attach — the output contract (name_a < name_b)

@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import MarkerLayout.root
 
 /** MATERIALIZED n-gram span postings — substring-level dedup served as
   * an INDEX MAINTENANCE operation, the text-side twin of
@@ -43,28 +44,18 @@ import org.apache.spark.sql.functions._
   * broadcast) immediately, so delete == rebuild from the moment the
   * marker lands (the d19 oracle). [[compact]] folds the tombstones
   * physically into a `gen-<g>` generation committed by ONE marker
-  * create; superseded generations AND the tombstones a PREVIOUS
-  * generation already folded are swept one round later — the grace
+  * create ([[MarkerLayout]]); superseded generations AND the
+  * tombstones a PREVIOUS generation already folded are swept one
+  * round later — the grace
   * discipline an in-flight reader of the old snapshot needs (its
   * root still resolves, and the tombstones it must anti-join are
   * still on disk until the next compaction).
   */
 object GramIndex {
   private case class Meta(n: Int, buckets: Int, tombFolded: Long)
-  private val TombMarker = "deleted-(\\d+)".r
-  private val GenMarker = "commit-(\\d+)".r
 
-  /** Latest committed generation, if any compaction has run. */
-  def liveGeneration(spark: SparkSession, path: String): Option[Long] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case GenMarker(n) => n.toLong }.maxOption
-  }
-
-  private def root(spark: SparkSession, path: String): String =
-    liveGeneration(spark, path).map(g => s"$path/gen-$g").getOrElse(path)
+  /** The flat layout [[build]] writes at the index root. */
+  private val FlatDirs = Seq("grams", "stats")
 
   private def meta(spark: SparkSession, path: String): Meta = {
     val g = DriverParquet.read(spark, s"${root(spark, path)}/stats").head
@@ -84,32 +75,13 @@ object GramIndex {
         .append("tombFolded", tombFolded))
     }
 
-  /** Committed tombstone batch seqs (marker exists). */
-  def committedTombs(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case TombMarker(n) => n.toLong }.sorted
-  }
-
-  /** Union of committed tombstone doc_ids NOT yet folded into the
-    * live generation — what every read anti-joins. */
-  private def tombstoneIds(spark: SparkSession, path: String,
-      m: Meta): Option[DataFrame] = {
-    val seqs = committedTombs(spark, path).filter(_ > m.tombFolded)
-    if (seqs.isEmpty) None
-    else Some(seqs.map(sq => spark.read.parquet(s"$path/tomb-$sq/ids"))
-      .reduce(_ unionByName _).distinct())
-  }
-
   /** The live gram rows: root layout minus unfolded tombstones (tiny
     * broadcast anti-join — deletes are visible before any compaction
     * rewrites a bucket). */
   private def liveGrams(spark: SparkSession, path: String,
       m: Meta): DataFrame = {
     val grams = spark.read.parquet(s"${root(spark, path)}/grams")
-    tombstoneIds(spark, path, m) match {
+    MarkerLayout.tombIds(spark, path, m.tombFolded) match {
       case Some(t) => grams.join(broadcast(t), Seq("doc_id"), "left_anti")
       case None => grams
     }
@@ -142,21 +114,7 @@ object GramIndex {
     require(n >= 2, "span length must be at least 2 tokens")
     require(buckets >= 1)
     val spark = docs.sparkSession
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      fs.listStatus(p).foreach { st =>
-        st.getPath.getName match {
-          case GenMarker(g) =>
-            fs.delete(st.getPath, false)
-            fs.delete(new Path(s"$path/gen-$g"), true)
-          case TombMarker(t) =>
-            fs.delete(st.getPath, false)
-            fs.delete(new Path(s"$path/tomb-$t"), true)
-          case _ => ()
-        }
-      }
-    }
+    MarkerLayout.reset(spark, path, FlatDirs)
     gramRows(docs, idCol, textCol, n, buckets)
       .repartition(col("bucket"))
       .write.mode(SaveMode.Overwrite)
@@ -188,22 +146,9 @@ object GramIndex {
     * index answers as if rebuilt without the documents (the d19
     * delete == rebuild oracle); [[compact]] reclaims physically.
     * Deleting an absent id is a no-op by construction. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // monotone past the live generation's fold watermark: after a
-    // sweep reclaims folded tomb dirs, a fresh delete must NOT reuse
-    // a seq ≤ tombFolded — the read path would treat it as already
-    // folded and serve the deleted docs
-    val seq = (committedTombs(spark, path) :+ meta(spark, path).tombFolded)
-      .max + 1
-    fs.delete(new Path(s"$path/tomb-$seq"), true) // crashed-attempt orphan
-    ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/tomb-$seq/ids")
-    require(fs.createNewFile(new Path(path, s"deleted-$seq")),
-      s"delete: marker create failed under $path")
-  }
+  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    MarkerLayout.commitTomb(spark, path, meta(spark, path).tombFolded, ids,
+      "doc_id")
 
   /** COMPACTION: fold the accumulated tombstones physically — rewrite
     * the live gram rows (already minus tombstones) into `gen-<g>`,
@@ -214,44 +159,17 @@ object GramIndex {
     * root keeps both the rows and the tombstones it needs until the
     * compaction after next. */
   def compact(spark: SparkSession, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     val m = meta(spark, path)
-    val prevGen = liveGeneration(spark, path)
-    val nextGen = prevGen.map(_ + 1).getOrElse(0L)
-    val genDir = s"$path/gen-$nextGen"
-    fs.delete(new Path(genDir), true) // orphan of a crashed attempt
-    val tombSeqs = committedTombs(spark, path).filter(_ > m.tombFolded)
-    val tombFolded = (m.tombFolded +: tombSeqs).max
-    liveGrams(spark, path, m)
-      .repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"$genDir/grams")
-    writeStats(spark, s"$genDir/stats", m.n, m.buckets, tombFolded)
-    require(fs.createNewFile(new Path(path, s"commit-$nextGen")),
-      s"compact: commit marker create failed under $path")
-    // grace sweep: only state superseded by a PREVIOUS compaction
-    prevGen.foreach { pg =>
-      // the previous generation's fold watermark: tombstones at or
-      // below it were folded ≥ 1 generation ago — no grace reader
-      // can still need them
-      val prevTf = spark.read.parquet(s"$path/gen-$pg/stats")
-        .head().getAs[Long]("tombFolded")
-      fs.listStatus(new Path(path)).foreach { st =>
-        st.getPath.getName match {
-          case GenMarker(g) if g.toLong < pg =>
-            fs.delete(st.getPath, false)
-            fs.delete(new Path(s"$path/gen-$g"), true)
-          case TombMarker(t) if t.toLong <= prevTf =>
-            fs.delete(st.getPath, false)
-            fs.delete(new Path(s"$path/tomb-$t"), true)
-          case _ => ()
-        }
-      }
-      // the pre-generation base layout is at least one round stale
-      fs.delete(new Path(s"$path/grams"), true)
-      fs.delete(new Path(s"$path/stats"), true)
+    // no streaming batches: the batch watermark stays at -1
+    MarkerLayout.commitGeneration(spark, path, -1L, m.tombFolded,
+      FlatDirs) { fold =>
+      liveGrams(spark, path, m)
+        .repartition(col("bucket"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(s"${fold.genDir}/grams")
+      writeStats(spark, s"${fold.genDir}/stats", m.n, m.buckets,
+        fold.tombFolded)
     }
   }
 

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import MarkerLayout.root
+
 /** MATERIALIZED inverted index: positional postings written as a
   * term-BUCKETED parquet layout, plus doc-length and corpus-stats side
   * tables — the index-build batch job a retrieval system runs once so
@@ -29,45 +31,20 @@ import org.apache.spark.sql.functions._
   * the index incrementally and [[compact]] folds the small files an
   * append stream accumulates back into one sorted file per bucket,
   * committed by an atomic snapshot-pointer marker (no renames — the
-  * object-store-safe layout-swap discipline).
+  * object-store-safe layout-swap discipline of [[MarkerLayout]]).
   */
 object TextIndex {
+  /** The flat layout [[build]] writes at the index root. */
+  private val FlatDirs = Seq("postings", "doclen", "stats")
+
   /** Build the index at `path`: bucketed positional postings
     * (doc_id, pos, term), doc lengths, one stats row. Positions ride
     * along so phrase/proximity queries can run from the same index. */
   def build(docs: DataFrame, idCol: String, textCol: String, path: String,
       buckets: Int = 64): Unit = {
     require(buckets >= 1)
-    // a REBUILD over a previously compacted or stream-maintained index
-    // must not leave stale generation/batch markers shadowing the
-    // fresh flat layout
-    val p = new Path(path)
-    val fs = p.getFileSystem(
-      docs.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      fs.listStatus(p).foreach { st =>
-        st.getPath.getName match {
-          case GenMarker(n) =>
-            fs.delete(st.getPath, false)
-            fs.delete(new Path(s"$path/gen-$n"), true)
-          case AppliedMarker(n) =>
-            fs.delete(st.getPath, false)
-            fs.delete(new Path(s"$path/batch-$n"), true)
-          case TombMarker(n) =>
-            fs.delete(st.getPath, false)
-            fs.delete(new Path(s"$path/tomb-$n"), true)
-          case _ => ()
-        }
-      }
-      // a rebuild resets stream history — the old run-id guard and
-      // served refreshes must not outlive the batches they tracked
-      fs.delete(new Path(path, "_runid"), false)
-      fs.delete(new Path(path, "served"), true)
-    }
-    val toks = docs.select(col(idCol).cast("long").as("doc_id"),
-        posexplode(split(trim(lower(col(textCol))), "\\s+"))
-          .as(Seq("pos", "term")))
-      .filter(col("term") =!= "")
+    MarkerLayout.reset(docs.sparkSession, path, FlatDirs)
+    val toks = tokens(docs, idCol, textCol)
     toks
       .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets)))
       .repartition(col("bucket"))
@@ -94,10 +71,7 @@ object TextIndex {
     val spark = docs.sparkSession
     val base = baseStats(spark, path)
     val live = root(spark, path)
-    val toks = docs.select(col(idCol).cast("long").as("doc_id"),
-        posexplode(split(trim(lower(col(textCol))), "\\s+"))
-          .as(Seq("pos", "term")))
-      .filter(col("term") =!= "")
+    val toks = tokens(docs, idCol, textCol)
     toks
       .withColumn("bucket", pmod(xxhash64(col("term")), lit(base.buckets)))
       .repartition(col("bucket"))
@@ -141,160 +115,64 @@ object TextIndex {
     * ONE file per bucket, sorted by (term, doc_id, pos) — so term
     * min/max row-group stats make the in-bucket `term IN (...)`
     * residual skippable, on top of the directory-level pruning.
-    * Doc lengths compact to one file the same way.
+    * Doc lengths compact to one file the same way. Committed streaming
+    * batches fold in and tombstoned docs drop out PHYSICALLY; the
+    * `folded_through` / `tomb_folded` watermarks advance past them.
     *
     * Bucket rewrites are independent single-task jobs submitted
     * CONCURRENTLY (the f3 compaction discipline — wall-clock is the
     * largest bucket, not the bucket count).
     *
     * The swap is SNAPSHOT-POINTER committed, zero renames: the whole
-    * compacted layout lands in a fresh `gen-N` directory, and the
-    * commit is ONE atomic empty-file create (`commit-N`). Readers
-    * resolve the max committed generation, so they see the old index
-    * until the marker exists and the new one after — never a
-    * half-state. A crash before the marker leaves an orphan `gen-N`
-    * the next attempt deletes; a crash after it leaves stale
-    * generations the next compaction sweeps. Renames are not atomic
-    * (or not cheap) on object stores; a marker create is — the same
-    * metadata-commit discipline as the [[FileManifest]] catalogs. */
+    * compacted layout lands in a fresh `gen-N` directory, committed by
+    * ONE atomic `commit-N` create, with superseded state swept one
+    * round later ([[MarkerLayout.commitGeneration]]). Readers see the
+    * old index until the marker exists and the new one after — never
+    * a half-state. */
   def compact(spark: SparkSession, path: String): Unit = {
     val base = baseStats(spark, path)
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val prevGen = liveGeneration(spark, path)
-    val cur = root(spark, path)
-    val nextGen = prevGen.map(_ + 1).getOrElse(0L)
-    val genDir = s"$path/gen-$nextGen"
-    fs.delete(new Path(genDir), true) // orphan of a crashed attempt
-    // streaming batches committed but not yet folded — they fold into
-    // this generation and `folded_through` advances past them
-    val batches = committedBatches(spark, path).filter(_ > base.foldedThrough)
-    val foldedThrough = (base.foldedThrough +: batches).max
-    // tombstoned docs drop PHYSICALLY into this generation; the
-    // watermark advances so reads stop paying their anti-join
-    val tombSeqs = committedTombs(spark, path).filter(_ > base.tombFolded)
-    val tombFolded = (base.tombFolded +: tombSeqs).max
-    val tombs = tombIds(spark, path, base)
-    def minusTombs(df: DataFrame): DataFrame = tombs match {
-      case Some(t) => df.join(broadcast(t), Seq("doc_id"), "left_anti")
-      case None => df
-    }
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val jobs = (0 until base.buckets).flatMap { b =>
-      // every source holding this bucket: the live layout + each
-      // unfolded batch staging dir — one multi-path read, one rewrite
-      val srcs = (s"$cur/postings/bucket=$b" +:
-          batches.map(id => s"$path/batch-$id/postings/bucket=$b"))
-        .filter(d => fs.exists(new Path(d)))
-      if (srcs.isEmpty) None
-      else Some(Future {
-        // reading bucket dirs directly drops the partition column;
-        // writing back under the same dir name restores it on discovery
-        minusTombs(spark.read.parquet(srcs: _*))
-          .coalesce(1)
-          .sortWithinPartitions("term", "doc_id", "pos")
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$genDir/postings/bucket=$b")
-      })
-    }
-    val dlJob = Future {
-      val srcs = (s"$cur/doclen" +:
-          batches.map(id => s"$path/batch-$id/doclen"))
-        .filter(d => fs.exists(new Path(d)))
-      minusTombs(spark.read.parquet(srcs: _*))
-        .coalesce(1).sortWithinPartitions("doc_id")
-        .write.mode(SaveMode.Overwrite).parquet(s"$genDir/doclen")
-    }
-    Await.result(Future.sequence(jobs :+ dlJob),
-      scala.concurrent.duration.Duration.Inf)
-    // the folded stats row rides INSIDE the generation, so the marker
-    // atomically switches postings, doclen, and stats as one; after a
-    // tombstone fold the folded doclen IS the ground truth
-    val st = spark.read.parquet(s"$genDir/doclen")
-      .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head
-    writeStatsRow(spark, s"$genDir/stats", st.getLong(0), st.getLong(1),
-      base.buckets, foldedThrough, tombFolded)
-    // THE COMMIT — one atomic create; everything before this line is
-    // invisible to readers, everything after is cleanup
-    require(fs.createNewFile(new Path(path, s"commit-$nextGen")),
-      s"compact: commit marker create failed under $path")
-    // GRACE-PERIOD sweep: a reader that resolved its generation/batch
-    // paths just before this commit is still reading them lazily, so
-    // the state THIS compaction supersedes is retained — only state
-    // superseded by a PREVIOUS compaction (its readers long gone) is
-    // deleted now; the next compaction sweeps today's leftovers. New
-    // readers never touch retained state: the commit marker points
-    // them at gen-N, and `folded_through` excludes folded batch dirs.
-    prevGen.foreach { pg =>
-      fs.listStatus(new Path(path)).foreach { st =>
-        st.getPath.getName match {
-          case GenMarker(n) if n.toLong < pg =>
-            fs.delete(st.getPath, false)
-            fs.delete(new Path(s"$path/gen-$n"), true)
-          case _ => ()
-        }
+    val fs = MarkerLayout.fs(spark, path)
+    MarkerLayout.commitGeneration(spark, path, base.foldedThrough,
+      base.tombFolded, FlatDirs) { fold =>
+      val tombs = MarkerLayout.tombIds(spark, path, base.tombFolded)
+      def minusTombs(df: DataFrame): DataFrame = tombs match {
+        case Some(t) => df.join(broadcast(t), Seq("doc_id"), "left_anti")
+        case None => df
       }
-      // the legacy flat layout was superseded by gen-0; once gen-1
-      // commits, gen-0's readers are the live ones and the flat copy
-      // has had its grace round
-      fs.delete(new Path(s"$path/postings"), true)
-      fs.delete(new Path(s"$path/doclen"), true)
-      fs.delete(new Path(s"$path/stats"), true)
-    }
-    // batch dirs folded by a PREVIOUS compaction (id <= the old fold
-    // boundary) have had their grace round; the ones this compaction
-    // folded keep their dirs AND markers (the advanced folded_through
-    // already excludes them from every new read)
-    fs.listStatus(new Path(path)).foreach { st =>
-      st.getPath.getName match {
-        case AppliedMarker(n) if n.toLong <= base.foldedThrough =>
-          fs.delete(st.getPath, false)
-          fs.delete(new Path(s"$path/batch-$n"), true)
-        // tombstones folded by a PREVIOUS compaction have had their
-        // grace round
-        case TombMarker(n) if n.toLong <= base.tombFolded =>
-          fs.delete(st.getPath, false)
-          fs.delete(new Path(s"$path/tomb-$n"), true)
-        case _ => ()
+      def sources(sub: String): Seq[String] =
+        (s"${fold.cur}/$sub" +: fold.batches.map(id => s"$path/batch-$id/$sub"))
+          .filter(d => fs.exists(new Path(d)))
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      implicit val ec: ExecutionContext = ExecutionContext.global
+      val jobs = (0 until base.buckets).flatMap { b =>
+        // every source holding this bucket: the live layout + each
+        // unfolded batch staging dir — one multi-path read, one rewrite
+        val srcs = sources(s"postings/bucket=$b")
+        if (srcs.isEmpty) None
+        else Some(Future {
+          // reading bucket dirs directly drops the partition column;
+          // writing back under the same dir name restores it on discovery
+          minusTombs(spark.read.parquet(srcs: _*))
+            .coalesce(1)
+            .sortWithinPartitions("term", "doc_id", "pos")
+            .write.mode(SaveMode.Overwrite)
+            .parquet(s"${fold.genDir}/postings/bucket=$b")
+        })
       }
+      val dlJob = Future {
+        minusTombs(spark.read.parquet(sources("doclen"): _*))
+          .coalesce(1).sortWithinPartitions("doc_id")
+          .write.mode(SaveMode.Overwrite).parquet(s"${fold.genDir}/doclen")
+      }
+      Await.result(Future.sequence(jobs :+ dlJob),
+        scala.concurrent.duration.Duration.Inf)
+      // after a tombstone fold the folded doclen IS the ground truth
+      val st = spark.read.parquet(s"${fold.genDir}/doclen")
+        .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head
+      writeStatsRow(spark, s"${fold.genDir}/stats", st.getLong(0),
+        st.getLong(1), base.buckets, fold.foldedThrough, fold.tombFolded)
     }
   }
-
-  private def writeRunId(fs: org.apache.hadoop.fs.FileSystem,
-      runFile: Path, runId: String): Unit = {
-    val out = fs.create(runFile, true)
-    try out.write(runId.getBytes("UTF-8")) finally out.close()
-  }
-
-  private val GenMarker = "commit-(\\d+)".r
-  private val AppliedMarker = "applied-(\\d+)".r
-  private val TombMarker = "deleted-(\\d+)".r
-
-  /** Max committed generation at `path`, None for the flat layout
-    * [[build]] writes (no compaction committed yet). */
-  def liveGeneration(spark: SparkSession, path: String): Option[Long] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case GenMarker(n) => n.toLong }.maxOption
-  }
-
-  /** Streaming batch ids whose `applied-<id>` commit marker exists —
-    * committed exactly-once ingest batches, folded or not. */
-  def committedBatches(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case AppliedMarker(n) => n.toLong }.sorted
-  }
-
-  /** Root the live postings/doclen hang under: the max committed
-    * `gen-N` directory, or `path` itself pre-compaction. */
-  private def root(spark: SparkSession, path: String): String =
-    liveGeneration(spark, path).map(n => s"$path/gen-$n").getOrElse(path)
 
   /** Live postings directory (generation-resolved) — the path specs
     * count files under. */
@@ -303,174 +181,71 @@ object TextIndex {
 
   /** EXACTLY-ONCE streaming ingest of one micro-batch, the unit
     * [[maintainStream]] drives: the batch's postings/doclen/stats land
-    * in their own `batch-<id>` staging dir (written with Overwrite, so
-    * a replay of a half-written batch simply rewrites it), and the
-    * commit is one atomic `applied-<id>` marker create. A replay of an
-    * already-committed batch sees its marker and returns without
-    * touching anything — at-least-once redelivery becomes exactly-once
-    * index state, the same batchId-keyed discipline as `AlertSink`.
-    * Queries read committed batches immediately (union'd with the base
-    * layout); [[compact]] folds them away and advances
-    * `folded_through` so nothing is ever double-counted. */
+    * in their own `batch-<id>` staging dir, committed by one atomic
+    * `applied-<id>` marker create; a replay of a committed batch is a
+    * no-op, and a changed `runId` fails loudly once the index has
+    * stream history ([[MarkerLayout.commitBatch]]). Queries read
+    * committed batches immediately (union'd with the base layout);
+    * [[compact]] folds them away and advances `folded_through` so
+    * nothing is ever double-counted. */
   def appendBatch(docs: DataFrame, idCol: String, textCol: String,
       path: String, batchId: Long, runId: String = ""): Unit = {
     val spark = docs.sparkSession
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // Batch ids are scoped to ONE streaming checkpoint: a maintainer
-    // restarted against a FRESH checkpoint restarts ids at 0, and the
-    // replay checks below would then silently drop its batches as
-    // "already committed". Record the run identity and fail loudly on
-    // an id-sequence change once the index has any stream history —
-    // an operator must keep the checkpoint, or rebuild the index.
-    if (runId.nonEmpty) {
-      val runFile = new Path(path, "_runid")
-      val recorded =
-        if (!fs.exists(runFile)) None
-        else {
-          val in = fs.open(runFile)
-          try Some(new String(in.readAllBytes(), "UTF-8").trim)
-          finally in.close()
-        }
-      recorded match {
-        case Some(r) if r == runId => () // same checkpoint — ids continue
-        case Some(_) =>
-          val hasHistory = committedBatches(spark, path).nonEmpty ||
-            baseStats(spark, path).foldedThrough >= 0
-          if (hasHistory) throw new IllegalStateException(
-            s"appendBatch: run id changed under $path (new checkpoint " +
-              "restarts batch ids at 0; its batches would be dropped as " +
-              "replays). Reuse the original checkpoint or rebuild the index.")
-          else writeRunId(fs, runFile, runId)
-        case None => writeRunId(fs, runFile, runId)
+    val base = baseStats(spark, path)
+    MarkerLayout.commitBatch(spark, path, batchId, runId,
+        base.foldedThrough) { bdir =>
+      val toks = tokens(docs, idCol, textCol)
+      val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
+      val delta = dl.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head
+      if (delta.getLong(0) > 0) {
+        toks
+          .withColumn("bucket", pmod(xxhash64(col("term")), lit(base.buckets)))
+          .repartition(col("bucket"))
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("bucket")
+          .parquet(s"$bdir/postings")
+        dl.write.mode(SaveMode.Overwrite).parquet(s"$bdir/doclen")
+      }
+      DriverParquet.overwrite(spark, s"$bdir/stats", DriverParquet.schema(
+        "message bstats { optional int64 n_docs; " +
+          "optional int64 total_tokens; }")) { gf =>
+        Seq(gf.newGroup().append("n_docs", delta.getLong(0))
+          .append("total_tokens", delta.getLong(1)))
       }
     }
-    val marker = new Path(path, s"applied-$batchId")
-    if (fs.exists(marker)) return // committed already — replayed delivery
-    val base = baseStats(spark, path)
-    // a batch at or below the fold boundary was committed AND folded —
-    // its marker is gone, but folded_through still proves it landed
-    if (batchId <= base.foldedThrough) return
-    val buckets = base.buckets
-    val bdir = s"$path/batch-$batchId"
-    fs.delete(new Path(bdir), true) // half-written replay debris
-    val toks = docs.select(col(idCol).cast("long").as("doc_id"),
-        posexplode(split(trim(lower(col(textCol))), "\\s+"))
-          .as(Seq("pos", "term")))
-      .filter(col("term") =!= "")
-    val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    val delta = dl.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head
-    if (delta.getLong(0) > 0) {
-      toks
-        .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets)))
-        .repartition(col("bucket"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"$bdir/postings")
-      dl.write.mode(SaveMode.Overwrite).parquet(s"$bdir/doclen")
-    }
-    DriverParquet.overwrite(spark, s"$bdir/stats", DriverParquet.schema(
-      "message bstats { optional int64 n_docs; " +
-        "optional int64 total_tokens; }")) { gf =>
-      Seq(gf.newGroup().append("n_docs", delta.getLong(0))
-        .append("total_tokens", delta.getLong(1)))
-    }
-    require(fs.createNewFile(marker),
-      s"appendBatch: marker create failed for batch $batchId under $path")
   }
 
   /** STREAMING index maintenance: wire a document stream into
     * [[appendBatch]], optionally compacting every `compactEvery`
     * batches so the staging-dir union stays bounded. The retrieval
     * trio keeps serving between micro-batches — each query sees every
-    * committed batch and never a partial one. Single maintainer per
-    * index path (the streaming engine already serializes batches
-    * within a query; don't run two maintainers against one path). */
+    * committed batch and never a partial one. */
   def maintainStream(docs: DataFrame, idCol: String, textCol: String,
       path: String, checkpointDir: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            id: Long) =>
-          appendBatch(batch.toDF(), idCol, textCol, path, id,
-            runId = checkpointRunId(batch.sparkSession, checkpointDir))
-          if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-            compact(batch.sparkSession, path)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    MarkerLayout.maintainStream(docs, path, checkpointDir, compactEvery,
+      appendBatch(_, idCol, textCol, path, _, _), compact(_, path))
 
-  /** The checkpoint's query id — the true scope of the batchId
-    * sequence. Read from the `metadata` file the streaming engine
-    * writes at start (present before batch 0 runs); it changes when a
-    * checkpoint is wiped EVEN at the same path, which is exactly the
-    * event that restarts batch ids. Falls back to the directory string
-    * if the file is unreadable. */
-  private def checkpointRunId(spark: SparkSession,
-      checkpointDir: String): String = {
-    val meta = new Path(checkpointDir, "metadata")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val in = fs.open(meta)
-      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      "\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt)
-        .map(_.group(1)).getOrElse(checkpointDir)
-    } catch { case _: java.io.IOException => checkpointDir }
-  }
-
-  /** CONTINUOUS top-k retrieval: maintain the index from a document
-    * stream AND re-serve a STANDING query set's BM25 top-k after every
-    * committed micro-batch — the streaming search topology (new docs
-    * arrive, standing results refresh) on top of the exactly-once
-    * maintenance path.
-    *
-    * Per micro-batch: [[appendBatch]] commits the batch (replay-safe),
-    * then [[bm25TopK]] — which already unions the base layout with
-    * every committed-unfolded batch — re-answers `queries` against the
-    * as-of-now index, and the results land under
-    * `path/served/batch-<id>` with Overwrite, so a REPLAYED batch
-    * rewrites byte-identical results instead of duplicating them:
-    * at-least-once redelivery becomes exactly-once serving, the same
-    * idempotence discipline as the maintenance itself. [[servedTopK]]
-    * reads the latest refresh. Serving rides the SAME trigger as
-    * maintenance because results only change when the index does —
-    * a separate poller would re-serve identical answers between
-    * batches for nothing. */
+  /** CONTINUOUS top-k retrieval: [[maintainStream]] plus a STANDING
+    * query set's [[bm25TopK]] re-served after every committed
+    * micro-batch (the streaming search topology: new docs arrive,
+    * standing results refresh); [[MarkerLayout.servedTopK]] reads the
+    * latest refresh. */
   def maintainAndServeStream(docs: DataFrame, idCol: String, textCol: String,
       path: String, checkpointDir: String, queries: Seq[(Int, Seq[String])],
       k: Int, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            id: Long) =>
-          val spark = batch.sparkSession
-          appendBatch(batch.toDF(), idCol, textCol, path, id,
-            runId = checkpointRunId(spark, checkpointDir))
-          if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-            compact(spark, path)
-          bm25TopK(spark, path, queries, k)
-            .withColumn("batch_id", lit(id))
-            .coalesce(1)
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$path/served/batch-$id")
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    MarkerLayout.maintainStream(docs, path, checkpointDir, compactEvery,
+      appendBatch(_, idCol, textCol, path, _, _), compact(_, path),
+      Some(bm25TopK(_, path, queries, k)))
 
-  /** The latest served refresh from [[maintainAndServeStream]] —
-    * (query_id, rank, doc_id, batch_id) of the highest committed
-    * serving batch. */
-  def servedTopK(spark: SparkSession, path: String): DataFrame = {
-    val served = new Path(path, "served")
-    val fs = served.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(served), s"nothing served yet under $path")
-    val ServedDir = "batch-(\\d+)".r
-    val latest = fs.listStatus(served).toSeq.map(_.getPath.getName)
-      .collect { case ServedDir(n) => n.toLong }.max
-    spark.read.parquet(s"$path/served/batch-$latest")
-  }
+  /** Tokens (doc_id, pos, term) of `docs`, as every write indexes them. */
+  private def tokens(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol).cast("long").as("doc_id"),
+        posexplode(split(trim(lower(col(textCol))), "\\s+"))
+          .as(Seq("pos", "term")))
+      .filter(col("term") =!= "")
 
   /** BM25 top-k over the MATERIALIZED index — same semantics and
     * output as `TextRank.bm25TopK`, but the postings scan opens only
@@ -629,40 +404,9 @@ object TextIndex {
     * delete-then-query == rebuild, spec-asserted. The next
     * [[compact]] applies tombstones physically and advances the
     * watermark; folded tombstone dirs sweep one grace round later. */
-  def delete(spark: SparkSession, path: String, docIds: DataFrame): Unit = {
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // monotone past the fold watermark: after a grace sweep reclaims
-    // folded tomb dirs, a fresh delete must not reuse a seq ≤
-    // tombFolded — the read path would treat it as already folded
-    val seq = (committedTombs(spark, path) :+
-      baseStats(spark, path).tombFolded).max + 1
-    fs.delete(new Path(s"$path/tomb-$seq"), true) // crashed-attempt orphan
-    docIds.select(col(docIds.columns.head).cast("long").as("doc_id"))
-      .distinct()
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/tomb-$seq/ids")
-    require(fs.createNewFile(new Path(path, s"deleted-$seq")),
-      s"delete: marker create failed under $path")
-  }
-
-  /** Committed tombstone batch seqs (marker exists). */
-  def committedTombs(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case TombMarker(n) => n.toLong }.sorted
-  }
-
-  /** Union of UNFOLDED committed tombstone ids. */
-  private def tombIds(spark: SparkSession, path: String,
-      base: BaseStats): Option[DataFrame] = {
-    val seqs = committedTombs(spark, path).filter(_ > base.tombFolded)
-    if (seqs.isEmpty) None
-    else Some(seqs.map(sq => spark.read.parquet(s"$path/tomb-$sq/ids"))
-      .reduce(_ unionByName _).distinct())
-  }
+  def delete(spark: SparkSession, path: String, docIds: DataFrame): Unit =
+    MarkerLayout.commitTomb(spark, path, baseStats(spark, path).tombFolded,
+      docIds, "doc_id")
 
   /** Sum of the per-batch stats deltas for the given batch ids. */
   private def batchStatsDeltas(spark: SparkSession, path: String,
@@ -678,9 +422,10 @@ object TextIndex {
     * after a delete equal a fresh index built without those docs. */
   private def loadStats(spark: SparkSession, path: String): (Long, Long, Int) = {
     val base = baseStats(spark, path)
-    val ids = committedBatches(spark, path).filter(_ > base.foldedThrough)
+    val ids = MarkerLayout.committedBatches(spark, path)
+      .filter(_ > base.foldedThrough)
     val (n, t) = batchStatsDeltas(spark, path, ids)
-    val (dn, dt) = tombIds(spark, path, base) match {
+    val (dn, dt) = MarkerLayout.tombIds(spark, path, base.tombFolded) match {
       case Some(tm) =>
         val r = doclenRaw(spark, path)
           .join(broadcast(tm), "doc_id")
@@ -691,22 +436,17 @@ object TextIndex {
     (base.nDocs + n - dn, base.totTok + t - dt, base.buckets)
   }
 
-  /** Unfolded committed batch ids, each paired with its staging root. */
-  private def unfoldedBatchDirs(spark: SparkSession, path: String,
-      sub: String): Seq[String] = {
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val ft = baseStats(spark, path).foldedThrough
-    committedBatches(spark, path).filter(_ > ft)
-      .map(id => s"$path/batch-$id/$sub")
-      .filter(d => fs.exists(new Path(d)))
-  }
+  /** `sub` of the live layout and of each unfolded committed batch. */
+  private def liveDirs(spark: SparkSession, path: String,
+      sub: String): Seq[String] =
+    s"${root(spark, path)}/$sub" +:
+      MarkerLayout.unfoldedBatchDirs(spark, path,
+        baseStats(spark, path).foldedThrough, sub)
 
   /** Base + unfolded batch doc lengths, BEFORE tombstone filtering —
     * what the stats adjustment reads the deleted docs' lengths from. */
   private def doclenRaw(spark: SparkSession, path: String): DataFrame =
-    (s"${root(spark, path)}/doclen" +: unfoldedBatchDirs(spark, path, "doclen"))
-      .map(spark.read.parquet(_))
+    liveDirs(spark, path, "doclen").map(spark.read.parquet(_))
       .reduce(_ unionByName _)
 
   /** The live doc-length table: raw minus committed tombstones. */
@@ -716,7 +456,7 @@ object TextIndex {
   /** Anti-join the committed-unfolded tombstones (tiny broadcast). */
   private def dropTombstoned(spark: SparkSession, path: String,
       df: DataFrame): DataFrame =
-    tombIds(spark, path, baseStats(spark, path)) match {
+    MarkerLayout.tombIds(spark, path, baseStats(spark, path).tombFolded) match {
       case Some(t) => df.join(broadcast(t), Seq("doc_id"), "left_anti")
       case None => df
     }
@@ -735,8 +475,7 @@ object TextIndex {
     // bucketed dir pruned by the same partition filter; compaction
     // bounds how many batch dirs this union ever spans
     dropTombstoned(spark, path,
-      (s"${root(spark, path)}/postings" +:
-          unfoldedBatchDirs(spark, path, "postings"))
+      liveDirs(spark, path, "postings")
         .map { d =>
           spark.read.parquet(d)
             .where(col("bucket").isin(termBuckets: _*) &&

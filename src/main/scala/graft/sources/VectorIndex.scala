@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.operators.Similarity
+import MarkerLayout.root
 
 /** MATERIALIZED balanced-IVF vector index: the production ANN serving
   * path at 100 TB is an index on DISK, not a per-query re-train.
@@ -50,6 +51,11 @@ import graft.operators.Similarity
   * readers (the grace discipline).
   */
 object VectorIndex {
+  /** The flat layout [[build]] and [[buildKnnGraph]] write at the index
+    * root before the first compaction: what a rebuild resets and the
+    * second compaction sweeps. */
+  private val FlatDirs = Seq("cells", "counts", "stats", "centroids",
+    "pqbook", "sqranges", "mipsnorm", "knng")
 
   /** Train the balanced coarse quantizer and materialize the index at
     * `path`. Parameters mirror [[Similarity.ivfBalancedTopK]]; a
@@ -73,31 +79,7 @@ object VectorIndex {
     require(metaCols.forall(c => !ReservedCellCols.contains(c)),
       s"metaCols collide with index-internal columns: $ReservedCellCols")
     val spark = corpus.sparkSession
-    // a rebuild over a previously compacted / stream-maintained index
-    // must not leave stale markers shadowing the fresh flat layout
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      fs.listStatus(p).foreach { st =>
-        st.getPath.getName match {
-          case GenMarker(n) =>
-            fs.delete(st.getPath, false)
-            fs.delete(new Path(s"$path/gen-$n"), true)
-          case AppliedMarker(n) =>
-            fs.delete(st.getPath, false)
-            fs.delete(new Path(s"$path/batch-$n"), true)
-          case TombMarker(n) =>
-            fs.delete(st.getPath, false)
-            fs.delete(new Path(s"$path/tomb-$n"), true)
-          case _ => ()
-        }
-      }
-      fs.delete(new Path(path, "_runid"), false)
-      fs.delete(new Path(path, "served"), true)
-      fs.delete(new Path(path, "pqbook"), true)
-      fs.delete(new Path(path, "sqranges"), true)
-      fs.delete(new Path(path, "mipsnorm"), true)
-    }
+    MarkerLayout.reset(spark, path, FlatDirs)
     val (assigned, cents) = Similarity.kmeansBalancedWithCentroids(
       corpus, clusters, iterations, capacity, maxRounds, scale,
       idCol, vecCol)
@@ -399,6 +381,14 @@ object VectorIndex {
     *  - REWRITE: only partition dirs holding an affected source are
     *    replaced (staged write + atomic dir swap per cell); the
     *    affected-cluster list is one clusters-bounded driver action.
+    *    The swap is NOT atomic across cells, nor within one (delete,
+    *    then rename): a reader that lists the graph while the loop
+    *    runs sees some changed cells refreshed and the rest stale, and
+    *    one cell without edges between its delete and its rename. A
+    *    crash inside the loop leaves that mix on disk, and a cell caught
+    *    between the two stays without edges until [[buildKnnGraph]]
+    *    runs again. Stale or missing edges cost low-nprobe recall only
+    *    (below), never a wrong exact answer.
     *
     * The refreshed graph serves [[topKExpand]] unchanged; at a full
     * probe serving stays bit-identical to [[topK]] whatever the graph
@@ -937,100 +927,42 @@ object VectorIndex {
     * no-op by construction. At 100 TB this is the only workable
     * delete: O(deleted ids) IO now, physical reclamation amortized
     * into the compaction the index already runs. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // monotone past the fold watermark: after a grace sweep reclaims
-    // folded tomb dirs, a fresh delete must not reuse a seq ≤
-    // tombFolded — the read path would treat it as already folded
-    val seq = (committedTombs(spark, path) :+
-      baseStats(spark, path).tombFolded).max + 1
-    fs.delete(new Path(s"$path/tomb-$seq"), true) // crashed-attempt orphan
-    ids.select(col(ids.columns.head).cast("long").as("vec_id")).distinct()
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/tomb-$seq/ids")
-    require(fs.createNewFile(new Path(path, s"deleted-$seq")),
-      s"delete: marker create failed under $path")
-  }
-
-  /** Committed tombstone batch seqs (marker exists). */
-  def committedTombs(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case TombMarker(n) => n.toLong }.sorted
-  }
-
-  /** Union of UNFOLDED committed tombstone ids — what live reads
-    * anti-join and the next compaction physically applies. */
-  private def tombstoneIds(spark: SparkSession, path: String,
-      st: IdxStats): Option[DataFrame] = {
-    val seqs = committedTombs(spark, path).filter(_ > st.tombFolded)
-    if (seqs.isEmpty) None
-    else Some(seqs.map(sq => spark.read.parquet(s"$path/tomb-$sq/ids"))
-      .reduce(_ unionByName _).distinct())
-  }
+  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    MarkerLayout.commitTomb(spark, path, baseStats(spark, path).tombFolded,
+      ids, "vec_id")
 
   /** EXACTLY-ONCE streaming append of one micro-batch: staging dir +
-    * atomic `applied-<id>` marker, replay-safe, run-id guarded — the
-    * [[TextIndex.appendBatch]] discipline verbatim. Remaining capacity
-    * is computed against base occupancy PLUS every committed batch's
-    * occupancy, so concurrent-batch history still bounds every cell. */
+    * atomic `applied-<id>` marker, replay-safe, run-id guarded
+    * ([[MarkerLayout.commitBatch]], as [[TextIndex.appendBatch]]).
+    * Remaining capacity is computed against base occupancy PLUS every
+    * committed batch's occupancy, so concurrent-batch history still
+    * bounds every cell. */
   def appendBatch(vectors: DataFrame, idCol: String, vecCol: String,
       path: String, batchId: Long, runId: String = ""): Unit = {
     val spark = vectors.sparkSession
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (runId.nonEmpty) {
-      val runFile = new Path(path, "_runid")
-      val recorded =
-        if (!fs.exists(runFile)) None
-        else {
-          val in = fs.open(runFile)
-          try Some(new String(in.readAllBytes(), "UTF-8").trim)
-          finally in.close()
-        }
-      recorded match {
-        case Some(r) if r == runId => ()
-        case Some(_) =>
-          val hasHistory = committedBatches(spark, path).nonEmpty ||
-            baseStats(spark, path).foldedThrough >= 0
-          if (hasHistory) throw new IllegalStateException(
-            s"appendBatch: run id changed under $path (new checkpoint " +
-              "restarts batch ids at 0; its batches would be dropped as " +
-              "replays). Reuse the original checkpoint or rebuild the index.")
-          else writeRunId(fs, runFile, runId)
-        case None => writeRunId(fs, runFile, runId)
+    val st = baseStats(spark, path)
+    MarkerLayout.commitBatch(spark, path, batchId, runId,
+        st.foldedThrough) { bdir =>
+      val codes = assignUnderRemaining(vectors, idCol, vecCol,
+        spark, path, st)
+      // one clusters-bounded aggregation serves the emptiness gate, the
+      // batch occupancy sidecar (driver-side write), and n_vecs
+      val taken = codes.groupBy("cluster").agg(count(lit(1)).as("n"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val newN = taken.map(_._2).sum
+      if (newN > 0) {
+        codes
+          .repartition(col("cluster"))
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("cluster")
+          .parquet(s"$bdir/cells")
+        writeCounts(spark, s"$bdir/counts", taken)
+      }
+      DriverParquet.overwrite(spark, s"$bdir/stats",
+        DriverParquet.schema("message bstats { optional int64 n_vecs; }")) {
+        gf => Seq(gf.newGroup().append("n_vecs", newN))
       }
     }
-    val marker = new Path(path, s"applied-$batchId")
-    if (fs.exists(marker)) return // committed already — replayed delivery
-    val st = baseStats(spark, path)
-    if (batchId <= st.foldedThrough) return // committed AND folded
-    val bdir = s"$path/batch-$batchId"
-    fs.delete(new Path(bdir), true) // half-written replay debris
-    val codes = assignUnderRemaining(vectors, idCol, vecCol,
-      spark, path, st)
-    // one clusters-bounded aggregation serves the emptiness gate, the
-    // batch occupancy sidecar (driver-side write), and n_vecs
-    val taken = codes.groupBy("cluster").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val newN = taken.map(_._2).sum
-    if (newN > 0) {
-      codes
-        .repartition(col("cluster"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("cluster")
-        .parquet(s"$bdir/cells")
-      writeCounts(spark, s"$bdir/counts", taken)
-    }
-    DriverParquet.overwrite(spark, s"$bdir/stats",
-      DriverParquet.schema("message bstats { optional int64 n_vecs; }")) {
-      gf => Seq(gf.newGroup().append("n_vecs", newN))
-    }
-    require(fs.createNewFile(marker),
-      s"appendBatch: marker create failed for batch $batchId under $path")
   }
 
   /** STREAMING index maintenance — wire a vector stream into
@@ -1039,190 +971,92 @@ object VectorIndex {
   def maintainStream(vectors: DataFrame, idCol: String, vecCol: String,
       path: String, checkpointDir: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            id: Long) =>
-          appendBatch(batch.toDF(), idCol, vecCol, path, id,
-            runId = checkpointRunId(batch.sparkSession, checkpointDir))
-          if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-            compact(batch.sparkSession, path)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    MarkerLayout.maintainStream(vectors, path, checkpointDir, compactEvery,
+      appendBatch(_, idCol, vecCol, path, _, _), compact(_, path))
 
-  /** CONTINUOUS ANN serving: maintain the index from a vector stream
-    * AND re-serve a STANDING query batch's top-k after every committed
-    * micro-batch — the ANN twin of
-    * [[TextIndex.maintainAndServeStream]]. Each refresh lands under
-    * `path/served/batch-<id>` with Overwrite (replayed batch =
-    * byte-identical rewrite, exactly-once serving); [[servedTopK]]
-    * reads the latest. Serving rides the maintenance trigger because
-    * results only change when the index does. */
+  /** CONTINUOUS ANN serving: [[maintainStream]] plus a STANDING query
+    * batch's [[topK]] re-served after every committed micro-batch — the
+    * ANN twin of [[TextIndex.maintainAndServeStream]];
+    * [[MarkerLayout.servedTopK]] reads the latest refresh. */
   def maintainAndServeStream(vectors: DataFrame, idCol: String,
       vecCol: String, path: String, checkpointDir: String,
       queries: DataFrame, k: Int, nprobe: Int, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            id: Long) =>
-          val spark = batch.sparkSession
-          appendBatch(batch.toDF(), idCol, vecCol, path, id,
-            runId = checkpointRunId(spark, checkpointDir))
-          if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-            compact(spark, path)
-          topK(spark, path, queries, k, nprobe)
-            .withColumn("batch_id", lit(id))
-            .coalesce(1)
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$path/served/batch-$id")
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    MarkerLayout.maintainStream(vectors, path, checkpointDir, compactEvery,
+      appendBatch(_, idCol, vecCol, path, _, _), compact(_, path),
+      Some(topK(_, path, queries, k, nprobe)))
 
-  /** The latest served refresh from [[maintainAndServeStream]]. */
-  def servedTopK(spark: SparkSession, path: String): DataFrame = {
-    val served = new Path(path, "served")
-    val fs = served.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(served), s"nothing served yet under $path")
-    val ServedDir = "batch-(\\d+)".r
-    val latest = fs.listStatus(served).toSeq.map(_.getPath.getName)
-      .collect { case ServedDir(n) => n.toLong }.max
-    spark.read.parquet(s"$path/served/batch-$latest")
-  }
-
-  /** Fold appended small files and committed streaming batches into
-    * ONE file per cell, sorted by vec_id, inside a fresh `gen-N`
-    * directory; commit with ONE atomic marker create; sweep only the
-    * state a PREVIOUS compaction superseded (grace round for in-flight
-    * readers) — the [[TextIndex.compact]] discipline. */
+  /** Fold appended small files, committed streaming batches and
+    * tombstones into ONE file per cell, sorted by vec_id, inside a
+    * fresh `gen-N` directory, committed by ONE atomic marker create
+    * with a grace round for superseded state
+    * ([[MarkerLayout.commitGeneration]], as [[TextIndex.compact]]).
+    * Occupancy recomputes from what actually landed, so deleted
+    * capacity becomes appendable again. */
   def compact(spark: SparkSession, path: String): Unit = {
     val st = baseStats(spark, path)
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val prevGen = liveGeneration(spark, path)
-    val cur = root(spark, path)
-    val nextGen = prevGen.map(_ + 1).getOrElse(0L)
-    val genDir = s"$path/gen-$nextGen"
-    fs.delete(new Path(genDir), true) // orphan of a crashed attempt
-    val batches = committedBatches(spark, path).filter(_ > st.foldedThrough)
-    val foldedThrough = (st.foldedThrough +: batches).max
-    // tombstones committed since the last fold apply PHYSICALLY now:
-    // their rows are dropped from the folded cells, occupancy counts
-    // are recomputed from what actually landed (freed capacity
-    // becomes appendable), and the watermark advances so reads stop
-    // paying the anti-join for folded batches
-    val tombSeqs = committedTombs(spark, path).filter(_ > st.tombFolded)
-    val tombFolded = (st.tombFolded +: tombSeqs).max
-    val tombs = tombstoneIds(spark, path, st)
-    def minusTombs(df: DataFrame): DataFrame = tombs match {
-      case Some(t) => df.join(broadcast(t), Seq("vec_id"), "left_anti")
-      case None => df
-    }
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // cell ids are the trainer's seed ids — enumerate them from the
-    // centroid sidecar, never assume 0..clusters-1
-    val jobs = readCentroids(spark, path).map(_._1).flatMap { c =>
-      val srcs = (s"$cur/cells/cluster=$c" +:
-          batches.map(id => s"$path/batch-$id/cells/cluster=$c"))
-        .filter(d => fs.exists(new Path(d)))
-      if (srcs.isEmpty) None
-      else Some(Future {
-        minusTombs(spark.read.parquet(srcs: _*))
-          .coalesce(1)
-          .sortWithinPartitions("vec_id")
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$genDir/cells/cluster=$c")
-      })
-    }
-    val centsJob = Future {
-      // centroids (and the PQ book when present) are immutable but
-      // must ride INSIDE the generation so the marker switches the
-      // whole index as one atomic unit
-      val cents = readCentroids(spark, path)
-      writeCentroids(spark, s"$genDir/centroids", cents)
-      if (hasBook(spark, path)) {
-        val (book, subspaces) = readBook(spark, path)
-        writeBook(spark, s"$genDir/pqbook", book, subspaces)
+    val fs = MarkerLayout.fs(spark, path)
+    MarkerLayout.commitGeneration(spark, path, st.foldedThrough,
+      st.tombFolded, FlatDirs) { fold =>
+      val genDir = fold.genDir
+      val tombs = MarkerLayout.tombIds(spark, path, st.tombFolded)
+      def minusTombs(df: DataFrame): DataFrame = tombs match {
+        case Some(t) => df.join(broadcast(t), Seq("vec_id"), "left_anti")
+        case None => df
       }
-      if (hasSqRanges(spark, path)) {
-        val (mns, mxs) = readSqRanges(spark, path)
-        writeSqRanges(spark, s"$genDir/sqranges", mns, mxs)
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      implicit val ec: ExecutionContext = ExecutionContext.global
+      // cell ids are the trainer's seed ids — enumerate them from the
+      // centroid sidecar, never assume 0..clusters-1
+      val jobs = readCentroids(spark, path).map(_._1).flatMap { c =>
+        val srcs = (s"${fold.cur}/cells/cluster=$c" +:
+            fold.batches.map(id => s"$path/batch-$id/cells/cluster=$c"))
+          .filter(d => fs.exists(new Path(d)))
+        if (srcs.isEmpty) None
+        else Some(Future {
+          minusTombs(spark.read.parquet(srcs: _*))
+            .coalesce(1)
+            .sortWithinPartitions("vec_id")
+            .write.mode(SaveMode.Overwrite)
+            .parquet(s"$genDir/cells/cluster=$c")
+        })
       }
-      if (hasMipsNorm(spark, path))
-        writeMipsNorm(spark, s"$genDir/mipsnorm",
-          readMipsNorm(spark, path))
-    }
-    Await.result(Future.sequence(jobs :+ centsJob),
-      scala.concurrent.duration.Duration.Inf)
-    // counts + stats derive from the FOLDED cells (not the carried
-    // counters): after a tombstone fold they are the ground truth —
-    // one clusters-bounded aggregation, sidecar written driver-side
-    val cnts = (if (fs.exists(new Path(s"$genDir/cells")))
-        spark.read.parquet(s"$genDir/cells")
-          .groupBy(col("cluster").cast("long").as("cluster"))
-          .agg(count(lit(1)).as("n"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      else Seq.empty[(Long, Long)])
-    writeCounts(spark, s"$genDir/counts", cnts)
-    val n = cnts.map(_._2).sum
-    writeStats(spark, s"$genDir/stats", n, st.clusters,
-      st.scale, st.capacity, st.dim, foldedThrough, tombFolded)
-    require(fs.createNewFile(new Path(path, s"commit-$nextGen")),
-      s"compact: commit marker create failed under $path")
-    // grace sweep: only state superseded by a PREVIOUS compaction
-    prevGen.foreach { pg =>
-      fs.listStatus(new Path(path)).foreach { stt =>
-        stt.getPath.getName match {
-          case GenMarker(n) if n.toLong < pg =>
-            fs.delete(stt.getPath, false)
-            fs.delete(new Path(s"$path/gen-$n"), true)
-          case _ => ()
+      val centsJob = Future {
+        // centroids (and the PQ book when present) are immutable but
+        // must ride INSIDE the generation so the marker switches the
+        // whole index as one atomic unit
+        val cents = readCentroids(spark, path)
+        writeCentroids(spark, s"$genDir/centroids", cents)
+        if (hasBook(spark, path)) {
+          val (book, subspaces) = readBook(spark, path)
+          writeBook(spark, s"$genDir/pqbook", book, subspaces)
         }
+        if (hasSqRanges(spark, path)) {
+          val (mns, mxs) = readSqRanges(spark, path)
+          writeSqRanges(spark, s"$genDir/sqranges", mns, mxs)
+        }
+        if (hasMipsNorm(spark, path))
+          writeMipsNorm(spark, s"$genDir/mipsnorm",
+            readMipsNorm(spark, path))
       }
-      fs.delete(new Path(s"$path/cells"), true)
-      fs.delete(new Path(s"$path/counts"), true)
-      fs.delete(new Path(s"$path/stats"), true)
-      fs.delete(new Path(s"$path/centroids"), true)
-      fs.delete(new Path(s"$path/pqbook"), true)
-    }
-    fs.listStatus(new Path(path)).foreach { stt =>
-      stt.getPath.getName match {
-        case AppliedMarker(n) if n.toLong <= st.foldedThrough =>
-          fs.delete(stt.getPath, false)
-          fs.delete(new Path(s"$path/batch-$n"), true)
-        // tombstones folded by a PREVIOUS compaction have had their
-        // grace round — in-flight readers of the superseded
-        // generation resolved them before this compaction began
-        case TombMarker(n) if n.toLong <= st.tombFolded =>
-          fs.delete(stt.getPath, false)
-          fs.delete(new Path(s"$path/tomb-$n"), true)
-        case _ => ()
-      }
+      Await.result(Future.sequence(jobs :+ centsJob),
+        scala.concurrent.duration.Duration.Inf)
+      // counts + stats derive from the FOLDED cells (not the carried
+      // counters): after a tombstone fold they are the ground truth —
+      // one clusters-bounded aggregation, sidecar written driver-side
+      val cnts = (if (fs.exists(new Path(s"$genDir/cells")))
+          spark.read.parquet(s"$genDir/cells")
+            .groupBy(col("cluster").cast("long").as("cluster"))
+            .agg(count(lit(1)).as("n"))
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        else Seq.empty[(Long, Long)])
+      writeCounts(spark, s"$genDir/counts", cnts)
+      writeStats(spark, s"$genDir/stats", cnts.map(_._2).sum, st.clusters,
+        st.scale, st.capacity, st.dim, fold.foldedThrough, fold.tombFolded)
     }
   }
 
   // ---- public introspection (specs + planners) -----------------------
-
-  /** Max committed generation, None for the flat layout. */
-  def liveGeneration(spark: SparkSession, path: String): Option[Long] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case GenMarker(n) => n.toLong }.maxOption
-  }
-
-  /** Streaming batch ids whose commit marker exists. */
-  def committedBatches(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case AppliedMarker(n) => n.toLong }.sorted
-  }
 
   /** Live cells directory (generation-resolved) — what plan specs
     * count opened files under. */
@@ -1242,9 +1076,7 @@ object VectorIndex {
   /** [[cellCounts]] as a driver-side map. */
   private def cellCountsDriver(spark: SparkSession,
       path: String): Map[Long, Long] = {
-    val dirs = s"${root(spark, path)}/counts" +:
-      unfoldedBatchDirs(spark, path, "counts")
-    dirs.flatMap(d => DriverParquet.read(spark, d))
+    liveDirs(spark, path, "counts").flatMap(d => DriverParquet.read(spark, d))
       .map(g => (DriverParquet.anyLong(g, "cluster"),
         DriverParquet.anyLong(g, "n")))
       .groupMapReduce(_._1)(_._2)(_ + _)
@@ -1264,7 +1096,8 @@ object VectorIndex {
     * unfolded batches. */
   def stats(spark: SparkSession, path: String): (Long, Int, Int, Long, Int) = {
     val st = baseStats(spark, path)
-    val extra = committedBatches(spark, path).filter(_ > st.foldedThrough)
+    val extra = MarkerLayout.committedBatches(spark, path)
+      .filter(_ > st.foldedThrough)
       .map(id => DriverParquet.read(spark, s"$path/batch-$id/stats")
         .head.getLong("n_vecs", 0))
       .sum
@@ -1272,10 +1105,6 @@ object VectorIndex {
   }
 
   // ---- shared internals ----------------------------------------------
-
-  private val GenMarker = "commit-(\\d+)".r
-  private val AppliedMarker = "applied-(\\d+)".r
-  private val TombMarker = "deleted-(\\d+)".r
 
   /** The builder's quantization, shared by every path that must agree
     * bit-for-bit: floor(x * scale) over the double-widened vector. */
@@ -1459,18 +1288,11 @@ object VectorIndex {
       .map(g => (g.getLong("cid", 0), DriverParquet.getLongs(g, "c")))
       .sortBy(_._1)
 
-  private def root(spark: SparkSession, path: String): String =
-    liveGeneration(spark, path).map(n => s"$path/gen-$n").getOrElse(path)
-
-  private def unfoldedBatchDirs(spark: SparkSession, path: String,
-      sub: String): Seq[String] = {
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val ft = baseStats(spark, path).foldedThrough
-    committedBatches(spark, path).filter(_ > ft)
-      .map(id => s"$path/batch-$id/$sub")
-      .filter(d => fs.exists(new Path(d)))
-  }
+  /** `sub` of the live layout and of each unfolded committed batch. */
+  private def liveDirs(spark: SparkSession, path: String,
+      sub: String): Seq[String] =
+    s"${root(spark, path)}/$sub" +: MarkerLayout.unfoldedBatchDirs(spark,
+      path, baseStats(spark, path).foldedThrough, sub)
 
   /** Columns the index owns in cell files; anything else is caller
     * metadata carried for filtered search. */
@@ -1554,7 +1376,7 @@ object VectorIndex {
   private def readCells(spark: SparkSession, path: String,
       metaCols: Seq[String] = Nil): DataFrame =
     dropTombstoned(spark, path,
-      (s"${root(spark, path)}/cells" +: unfoldedBatchDirs(spark, path, "cells"))
+      liveDirs(spark, path, "cells")
         .map { d =>
           spark.read.parquet(d)
             .select(col("vec_id") +: col("q").as("__cq") +:
@@ -1569,7 +1391,7 @@ object VectorIndex {
     * compaction has rewritten a cell. */
   private def dropTombstoned(spark: SparkSession, path: String,
       cells: DataFrame): DataFrame =
-    tombstoneIds(spark, path, baseStats(spark, path)) match {
+    MarkerLayout.tombIds(spark, path, baseStats(spark, path).tombFolded) match {
       case Some(t) => cells.join(broadcast(t), Seq("vec_id"), "left_anti")
       case None => cells
     }
@@ -1580,7 +1402,7 @@ object VectorIndex {
   private def readCellsCols(spark: SparkSession, path: String,
       cols: Seq[String]): DataFrame =
     dropTombstoned(spark, path,
-      (s"${root(spark, path)}/cells" +: unfoldedBatchDirs(spark, path, "cells"))
+      liveDirs(spark, path, "cells")
         .map { d =>
           spark.read.parquet(d)
             .select(col("vec_id") +: cols.map(col) :+
@@ -1650,24 +1472,6 @@ object VectorIndex {
     if (!hasBq(spark, path)) withMips2
     else withMips2.withColumn("bqhi", bqHalf(col("q"), 0, 31))
       .withColumn("bqlo", bqHalf(col("q"), 32, 63))
-  }
-
-  private def writeRunId(fs: org.apache.hadoop.fs.FileSystem,
-      runFile: Path, runId: String): Unit = {
-    val out = fs.create(runFile, true)
-    try out.write(runId.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def checkpointRunId(spark: SparkSession,
-      checkpointDir: String): String = {
-    val meta = new Path(checkpointDir, "metadata")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val in = fs.open(meta)
-      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      "\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt)
-        .map(_.group(1)).getOrElse(checkpointDir)
-    } catch { case _: java.io.IOException => checkpointDir }
   }
 
   /** Replace `dst` with `tmp` (local/HDFS rename path — the counts

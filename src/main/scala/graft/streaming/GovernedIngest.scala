@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.hadoop.fs.Path
 
 import graft.operators.Expectations
-import graft.sources.FileManifest
+import graft.sources.{FileManifest, MarkerLayout}
 
 /** CONTINUOUS WRITE-AUDIT-PUBLISH into the graft table format — the
   * streaming write path the batch-only front door lacked: a document/
@@ -216,7 +216,7 @@ object GovernedIngest {
   /** The continuous form: wire a stream into [[ingestBatch]]. The
     * batchId sequence is scoped to the CHECKPOINT's query id (wiping
     * the checkpoint restarts ids — exactly the event that must remap
-    * tags), read the same way TextIndex.maintainStream reads it. */
+    * tags), read as the index maintainers read it. */
   def wapStream(docs: DataFrame, t: Table, checkpointDir: String)
       : StreamingQuery =
     docs.writeStream
@@ -240,17 +240,7 @@ object GovernedIngest {
     * the true scope of the batchId sequence (changes when a
     * checkpoint is wiped even at the same path). */
   private[graft] def runTag(spark: SparkSession,
-      checkpointDir: String): String = {
-    val meta = new Path(checkpointDir, "metadata")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val raw =
-      try {
-        val in = fs.open(meta)
-        val txt = try new String(in.readAllBytes(), "UTF-8")
-          finally in.close()
-        "\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt)
-          .map(_.group(1)).getOrElse(checkpointDir)
-      } catch { case _: java.io.IOException => checkpointDir }
-    raw.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(12)
-  }
+      checkpointDir: String): String =
+    MarkerLayout.checkpointRunId(spark, checkpointDir)
+      .replaceAll("[^A-Za-z0-9._-]", "_").takeRight(12)
 }

@@ -1352,8 +1352,25 @@ class OperatorsSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$root/gen-0/grams")
       .join(dead, "doc_id").isEmpty, "folded cells still carry deleted docs")
     // a SECOND compaction sweeps the superseded base layout and the
-    // tombstones gen-0 already folded
-    GramIndex.compact(spark, root)
+    // tombstones gen-0 already folded. The sweep takes gen-0's fold
+    // watermark from the stats row the compaction read on the driver;
+    // reading it back with Spark cost two more jobs (schema inference
+    // and `head`): 6 jobs in all, where the fold itself runs 4
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graftshim.SparkShims.drainListenerBus(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      GramIndex.compact(spark, root)
+      org.apache.spark.sql.graftshim.SparkShims.drainListenerBus(spark)
+    } finally sc.removeSparkListener(l)
+    info(s"${jobs.get} Spark jobs in the second compaction")
+    assert(jobs.get <= 4, s"${jobs.get} Spark jobs in the second compaction")
     assert(exists("commit-1") && exists("gen-1/grams"))
     assert(!exists("grams") && !exists("stats"),
       "second compaction must sweep the pre-generation base layout")

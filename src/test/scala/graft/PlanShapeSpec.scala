@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{Bucketing, RefTables, Tables}
+import graft.sources.{Bucketing, MarkerLayout, RefTables, Tables}
 
 /** Locks in the SURVEY §4 plan claims: predicate pushdown reaches the
   * parquet scan, dims broadcast, and bucketed tables join without a
@@ -1993,8 +1993,14 @@ class PlanShapeSpec extends AnyFunSuite {
     val emb = Tables.load(spark, "/root/testdata/sf0.01", "embeddings")
     val n = emb.count()
     val cap = math.ceil(n / 6.0).toLong
+    // every flat-layout sidecar present, so the sweep below covers them
     VectorIndex.build(emb, "vec_id", "embedding", tmp,
-      clusters = 8, iterations = 2, capacity = cap, maxRounds = 6)
+      clusters = 8, iterations = 2, capacity = cap, maxRounds = 6,
+      sqTier = true, mipsTier = true)
+    VectorIndex.buildKnnGraph(spark, tmp, k = 4, rounds = 0)
+    val flatDirs = Seq("cells", "counts", "stats", "centroids", "sqranges",
+      "mipsnorm", "knng")
+    def flatLeft = flatDirs.filter(d => new java.io.File(tmp, d).exists)
     val deadDf = emb.filter(col("vec_id") % 5 === 2).select("vec_id")
     val dead = deadDf.collect().map(_.getLong(0)).toSet
     VectorIndex.delete(spark, tmp, deadDf)
@@ -2041,10 +2047,13 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(folded.intersect(dead).isEmpty, "folded cells must drop tombstones")
     assert(rows(VectorIndex.topK(spark, tmp, q, k = 5, nprobe = 8)) ==
       rows(brute), "compaction changed answers")
-    // the NEXT compaction sweeps the folded tombstone dirs (grace round)
+    assert(flatLeft == flatDirs, "the flat layout keeps its grace round")
+    // the NEXT compaction sweeps the folded tombstone dirs and the whole
+    // flat layout, tier sidecars and kNN graph included (grace round)
     VectorIndex.compact(spark, tmp)
     val tombDirs = new java.io.File(tmp).list().count(_.startsWith("tomb-"))
     assert(tombDirs == 0, "folded tombstones must sweep after their grace round")
+    assert(flatLeft.isEmpty, s"flat layout left after its grace round: $flatLeft")
     assert(rows(VectorIndex.topK(spark, tmp, q, k = 5, nprobe = 8)) ==
       rows(brute))
     // regression: a delete AFTER the sweep must stay visible — its seq
@@ -2175,7 +2184,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // compaction: one file per occupied cell, snapshot-pointer commit,
     // answers unchanged
     VectorIndex.compact(spark, tmp)
-    assert(VectorIndex.liveGeneration(spark, tmp).contains(0L))
+    assert(MarkerLayout.liveGeneration(spark, tmp).contains(0L))
     val cellFiles = java.nio.file.Files.walk(
         java.nio.file.Paths.get(VectorIndex.cellsDir(spark, tmp)))
       .filter(_.toString.endsWith(".parquet")).count().toInt
@@ -2340,10 +2349,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // must be invisible to readers and harmless to the next compaction
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$idx/gen-0/postings/bucket=0"))
-    assert(TextIndex.liveGeneration(spark, idx).isEmpty,
+    assert(MarkerLayout.liveGeneration(spark, idx).isEmpty,
       "an uncommitted generation must not be live")
     TextIndex.compact(spark, idx)
-    assert(TextIndex.liveGeneration(spark, idx).contains(0L),
+    assert(MarkerLayout.liveGeneration(spark, idx).contains(0L),
       "compaction must commit generation 0")
     val filesAfter = parquetFiles(TextIndex.postingsDir(spark, idx)).size
     assert(filesAfter < filesBefore,
@@ -2367,7 +2376,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // commits, gen-0 is retained as THIS round's grace copy, and the
     // flat layout (grace round elapsed) is swept now
     TextIndex.compact(spark, idx)
-    assert(TextIndex.liveGeneration(spark, idx).contains(1L))
+    assert(MarkerLayout.liveGeneration(spark, idx).contains(1L))
     assert(java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$idx/gen-0")),
       "just-superseded generation gets a grace round")
@@ -2378,7 +2387,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "recompaction must not change answers")
     // a THIRD cycle sweeps gen-0 (its grace round elapsed)
     TextIndex.compact(spark, idx)
-    assert(TextIndex.liveGeneration(spark, idx).contains(2L))
+    assert(MarkerLayout.liveGeneration(spark, idx).contains(2L))
     assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$idx/gen-0")),
       "generation past its grace round must be swept")

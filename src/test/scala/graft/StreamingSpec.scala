@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.StreamIntervalJoinSpec.withoutRule
 import graft.functions.BloomMightContain
+import graft.sources.MarkerLayout
 import graft.streaming.{CorpusIngest, OrderEnrichmentJob, StatefulOps, StreamingDedup}
 
 class StreamingSpec extends AnyFunSuite {
@@ -894,13 +895,13 @@ class StreamingSpec extends AnyFunSuite {
         "indexed top-k must include the streamed batch")
       in.addData(rest.toSeq)
       q.processAllAvailable() // batch id 1 → compactEvery=2 fires here
-      assert(TextIndex.liveGeneration(spark, idx).nonEmpty,
+      assert(MarkerLayout.liveGeneration(spark, idx).nonEmpty,
         "compaction must have committed a generation")
       // GRACE PERIOD: just-folded batch dirs + markers are retained one
       // compaction round for in-flight readers; folded_through already
       // excludes them from every new read, and the NEXT compaction
       // sweeps them (asserted below)
-      assert(TextIndex.committedBatches(spark, idx) == Seq(0L, 1L),
+      assert(MarkerLayout.committedBatches(spark, idx) == Seq(0L, 1L),
         "just-folded batch markers get a grace round before the sweep")
       val expectAll = {
         val ref = java.nio.file.Files.createTempDirectory("graft-tidx-r2").toString
@@ -917,7 +918,7 @@ class StreamingSpec extends AnyFunSuite {
         "replaying a committed batch must be a no-op")
       // the NEXT compaction sweeps the grace-retained folded batches
       TextIndex.compact(spark, idx)
-      assert(TextIndex.committedBatches(spark, idx).isEmpty,
+      assert(MarkerLayout.committedBatches(spark, idx).isEmpty,
         "batches past their grace round must be swept")
       assert(top(idx) == expectAll,
         "grace sweep must not change answers")
@@ -949,7 +950,7 @@ class StreamingSpec extends AnyFunSuite {
     def adhoc(upTo: Long) = operators.TextRank.bm25TopK(
         docs.filter(col("doc_id") < upTo), queries, k = 10)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
-    def served() = TextIndex.servedTopK(spark, idx)
+    def served() = MarkerLayout.servedTopK(spark, idx)
       .select("query_id", "rank", "doc_id")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
     val in = MemoryStream[(Long, String)]
@@ -961,22 +962,35 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(served() == adhoc(300),
         "standing results must reflect the first streamed batch")
-      assert(TextIndex.servedTopK(spark, idx).select("batch_id")
+      assert(MarkerLayout.servedTopK(spark, idx).select("batch_id")
         .head.getLong(0) == 0L)
       in.addData(docs.filter(col("doc_id") >= 300)
         .as[(Long, String)].collect().toSeq)
       q.processAllAvailable() // batch 1 -> compaction folds, then re-serve
-      assert(TextIndex.liveGeneration(spark, idx).nonEmpty)
+      assert(MarkerLayout.liveGeneration(spark, idx).nonEmpty)
       assert(served() == adhoc(Long.MaxValue),
         "standing results must track the stream through the fold")
-      assert(TextIndex.servedTopK(spark, idx).select("batch_id")
+      assert(MarkerLayout.servedTopK(spark, idx).select("batch_id")
         .head.getLong(0) == 1L)
       // each refresh is its own committed dir; a replay overwrites in
       // place rather than duplicating
-      val servedDirs = java.nio.file.Files.list(
-          java.nio.file.Paths.get(s"$idx/served"))
-        .filter(_.getFileName.toString.startsWith("batch-")).count()
-      assert(servedDirs == 2, s"expected 2 served refreshes, got $servedDirs")
+      def servedDirs() = java.nio.file.Files.list(
+          java.nio.file.Paths.get(s"$idx/served")).toArray
+        .map(_.toString.split('/').last).filter(_.startsWith("batch-"))
+        .toSet
+      assert(servedDirs() == Set("batch-0", "batch-1"))
+      // a running stream keeps only the latest two refreshes: the
+      // older one is the grace copy for a reader that resolved it
+      val late = docs.filter(col("doc_id") < 20)
+        .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
+      in.addData(late.as[(Long, String)].collect().toSeq)
+      q.processAllAvailable()
+      assert(servedDirs() == Set("batch-1", "batch-2"),
+        s"served/ must hold the latest two refreshes, got ${servedDirs()}")
+      assert(served() == operators.TextRank.bm25TopK(docs.unionByName(late),
+          queries, k = 10).collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet,
+        "the latest refresh must cover the third batch")
     } finally q.stop()
   }
 
@@ -1033,7 +1047,7 @@ class StreamingSpec extends AnyFunSuite {
       in.toDF().toDF("vec_id", "embedding"),
       "vec_id", "embedding", idx, ckpt, q, k = 5, nprobe = 8,
       compactEvery = 2)
-    def servedRows() = VectorIndex.servedTopK(spark, idx)
+    def servedRows() = MarkerLayout.servedTopK(spark, idx)
       .select("query_id", "rank", "neighbor_id", "sim")
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
@@ -1051,12 +1065,12 @@ class StreamingSpec extends AnyFunSuite {
         "standing serving must reflect the first streamed batch")
       in.addData(rest.toSeq)
       sq.processAllAvailable() // batch 1 -> compactEvery=2 fires
-      assert(VectorIndex.liveGeneration(spark, idx).nonEmpty,
+      assert(MarkerLayout.liveGeneration(spark, idx).nonEmpty,
         "compaction must have committed a generation")
       assert(top() == brute(emb), "after fold, index must cover everything")
       assert(servedRows() == brute(emb),
         "standing serving must track the stream through the fold")
-      assert(VectorIndex.servedTopK(spark, idx).select("batch_id")
+      assert(MarkerLayout.servedTopK(spark, idx).select("batch_id")
         .head.getLong(0) == 1L)
       // capacity held through streaming appends AND the fold
       val counts = VectorIndex.cellCounts(spark, idx).collect().map(_.getLong(1))
@@ -1069,7 +1083,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(top() == brute(emb), "replaying a committed batch must be a no-op")
       // grace-retained folded batches are swept by the NEXT compaction
       VectorIndex.compact(spark, idx)
-      assert(VectorIndex.committedBatches(spark, idx).isEmpty,
+      assert(MarkerLayout.committedBatches(spark, idx).isEmpty,
         "batches past their grace round must be swept")
       assert(top() == brute(emb), "grace sweep must not change answers")
       // a fresh checkpoint restarting batch ids must fail loudly, not

@@ -6,7 +6,8 @@ Usage: check_oracle.py <sfDir> <verifyOutDir>
 For each <name> dir in verifyOutDir, reads the Spark parquet, runs the
 matching oracle_sql.json query in DuckDB over the sfDir tables, and
 compares schema (column names), row count, and values (sorted columns,
-sorted rows, exact equality).
+sorted rows, exact equality). An oracle key with no output dir (its
+query threw, and Verify deleted the dir) prints MISSING and fails.
 """
 import sys, json, glob, os
 import duckdb
@@ -24,6 +25,10 @@ def canon(rows, cols):
     return sorted((tuple(r[i] for i in idx) for r in rows), key=key), sorted(cols)
 
 fails = 0
+for name in sorted(oracles):
+    if not os.path.isdir(os.path.join(out, name)):
+        print(f"{name}: MISSING (no output dir)")
+        fails += 1
 for d in sorted(glob.glob(os.path.join(out, "*"))):
     name = os.path.basename(d)
     if not os.path.isdir(d):
